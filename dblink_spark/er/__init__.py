@@ -20,4 +20,4 @@ Layering (all reference citations point into /root/reference):
 
 from dblink_spark.er.attributes import Attribute, BetaParams, ConstantSim, LevenshteinSim  # noqa: F401
 from dblink_spark.er.index import AttributeIndex  # noqa: F401
-from dblink_spark.er.cache import RecordsCache, encode_records  # noqa: F401
+from dblink_spark.er.cache import RecordsCache  # noqa: F401

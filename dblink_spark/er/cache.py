@@ -1,17 +1,18 @@
-"""RecordsCache: dataset statistics + dictionary encoding.
+"""RecordsCache: dataset statistics and the per-attribute indexes.
 
-The reference gathers per-file sizes, per-attribute value counts, and
+The reference gathers per-file sizes, per-attribute value counts and
 missing counts in a single RDD foreach with map-accumulators
-(ref: RecordsCache.scala:74-106) and encodes records via a broadcast
-string→id map (ref: RecordsCache.scala:120-134).
+(ref: RecordsCache.scala:74-106). Here the same single pass is one stacked
+aggregation: every record is exploded to one (file_id, attr_id, value) row
+per attribute, and the rows are grouped with a count. The driver reads the
+file sizes, the missing counts (null values) and every attribute's sorted
+(value, weight) domain off that one small result, and
+`index.build_attribute_indexes` finds all attributes' neighbor pairs in one
+more job.
 
-Spark-first rebuild:
-- statistics are DataFrame aggregations (whole-stage codegen, map-side
-  partial aggregation — the accumulator pattern is exactly what Catalyst
-  generates for groupBy().count());
-- dictionary encoding is a broadcast hash join per attribute against the
-  per-attribute dimension table (value, id), missing → -1 via coalesce.
-  All joins fuse into one stage; nothing leaves the JVM.
+Records are dictionary-encoded where they are used, inside the
+`state.init_state` map: a value's id is its rank in the sorted domain
+(ref: RecordsCache.scala:120-134), and a missing value is -1.
 
 The resulting `RecordsCache` (attribute indexes + file sizes) is a small
 Python object broadcast into the MCMC kernels.
@@ -21,11 +22,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from dblink_spark.er.attributes import Attribute, BetaParams
-from dblink_spark.er.index import AttributeIndex, build_attribute_index
+from dblink_spark.er.index import AttributeIndex, build_attribute_indexes
 
 
 @dataclass
@@ -61,67 +63,52 @@ def build_records_cache(
     `records` schema: rec_id string, file_id string, and one string column
     per matching attribute (nulls = missing).
     """
-    attr_names = [a.name for a in attributes]
-
-    # per-file sizes + per-(file, attr) missing counts in ONE aggregation job
-    agg_exprs = [F.count("*").alias("__n")]
-    for i, name in enumerate(attr_names):
-        agg_exprs.append(
-            F.sum(F.when(F.col(name).isNull(), 1).otherwise(0)).alias(f"__miss_{i}")
+    cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("attr_id"), F.col(a.name).cast("string").alias("value")
+                )
+                for i, a in enumerate(attributes)
+            ]
         )
-    stats = records.groupBy("file_id").agg(*agg_exprs).collect()
-    file_sizes = {r["file_id"]: r["__n"] for r in stats}
-    missing_counts = {
-        (r["file_id"], i): r[f"__miss_{i}"]
-        for r in stats
-        for i in range(len(attr_names))
-        if r[f"__miss_{i}"]
-    }
-
-    # per-attribute domains: one groupBy-count per attribute (jobs run over
-    # the cached records projection; each is a single shuffle of |domain| rows)
-    indexes = []
-    powers = range(1, expected_max_cluster_size + 1)
-    for attr in attributes:
-        dom = (
-            records.select(F.col(attr.name).alias("value"))
-            .filter(F.col("value").isNotNull())
-            .groupBy("value")
-            .agg(F.count("*").cast("double").alias("weight"))
+    )
+    counts = (
+        records.select("file_id", cells.alias("cell"))
+        .groupBy("file_id", "cell.attr_id", "cell.value")
+        .count()
+        .toArrow()
+        .to_pandas()
+    )
+    # every record has one row per attribute, so attribute 0 counts each once
+    file_sizes = counts[counts["attr_id"] == 0].groupby("file_id")["count"].sum()
+    missing = counts["value"].isna()
+    missing_counts = (
+        counts[missing].groupby(["file_id", "attr_id"])["count"].sum()
+    )
+    # sorted by (attr_id, value); Python str order is code-point order,
+    # which is the UTF-8 byte order Spark sorts strings in
+    present = (
+        counts[~missing].groupby(["attr_id", "value"])["count"].sum().reset_index()
+    )
+    domains = []
+    for i in range(len(attributes)):
+        dom = present[present["attr_id"] == i]
+        domains.append(
+            (np.array(dom["value"].tolist(), dtype=object), dom["count"].to_numpy(np.float64))
         )
-        indexes.append(build_attribute_index(dom, attr.sim_fn, precache_powers=powers))
 
+    indexes = build_attribute_indexes(
+        records.sparkSession,
+        domains,
+        [a.sim_fn for a in attributes],
+        precache_powers=range(1, expected_max_cluster_size + 1),
+    )
     return RecordsCache(
         attributes=attributes,
         indexes=indexes,
-        file_sizes=file_sizes,
-        missing_counts=missing_counts,
-    )
-
-
-def encode_records(records: DataFrame, cache: RecordsCache) -> DataFrame:
-    """Dictionary-encode record attribute values to dense int ids.
-
-    Returns: rec_id string, file_id string, values array<int> (missing = -1).
-    Encoding joins are broadcast hash joins against tiny dimension tables
-    (ref semantics: RecordsCache.scala:120-134, valueIdxOf per attribute).
-    """
-    spark = records.sparkSession
-    out = records
-    id_cols = []
-    for attr_id, (attr, idx) in enumerate(zip(cache.attributes, cache.indexes)):
-        dim = spark.createDataFrame(
-            [(str(v), int(i)) for i, v in enumerate(idx.values)],
-            f"__v_{attr_id} string, __id_{attr_id} int",
-        )
-        out = out.join(
-            F.broadcast(dim), on=out[attr.name] == dim[f"__v_{attr_id}"], how="left"
-        )
-        id_cols.append(F.coalesce(F.col(f"__id_{attr_id}"), F.lit(-1)))
-    return out.select(
-        F.col("rec_id").cast("string").alias("rec_id"),
-        F.col("file_id").cast("string").alias("file_id"),
-        F.array(*id_cols).alias("values"),
+        file_sizes={f: int(n) for f, n in file_sizes.items()},
+        missing_counts={(f, int(i)): int(n) for (f, i), n in missing_counts.items()},
     )
 
 

@@ -10,14 +10,21 @@ Semantics mirror the reference (ref: AttributeIndex.scala:106-245):
 - sim_norm(v) = 1 / sum_w p(w) * expSim(w, v);
 - power distribution k: p(v) * sim_norm(v)^k, normalized.
 
-The *build* is Spark-first: domain + weights come from a groupBy agg, and the
-all-pairs similarity comes from a crossJoin using the JVM-side
-`F.levenshtein`, pre-pruned by a length-band bound (|len(a)-len(b)| lower-
-bounds the edit distance) so the quadratic work only touches pairs that can
-clear the threshold. The reference does an unpruned RDD cartesian
-(ref: AttributeIndex.scala:219-231). The finished index is a small numpy
-container broadcast to executors — same distribution story as the reference's
-broadcast RecordsCache.
+The *build* takes each attribute's sorted (value, weight) domain (the
+records cache gathers all of them in one aggregation) and finds every
+attribute's neighbor pairs in ONE Spark job: the domains go into one table
+built from Arrow, each attribute's self-join query runs on its slice of it,
+and the union of the queries, tagged with attr_id, comes back through one
+`toArrow`. Each query computes the JVM-side `F.levenshtein` only on pairs
+that survive two prunes: a length-bucketed equi-join (the length gap
+lower-bounds the edit distance) and a character-bitmask bound; a similarity
+without length bounds falls back to a broadcast cross join with a
+length-band filter. The reference does an unpruned RDD cartesian
+(ref: AttributeIndex.scala:219-231). One driver-side CSR builder turns the
+pairs into the index, for the batched build, the one-attribute
+`build_attribute_index` and the driver-local `build_attribute_index_local`
+alike. The finished index is a small numpy container broadcast to executors
+— same distribution story as the reference's broadcast RecordsCache.
 """
 
 from __future__ import annotations
@@ -25,10 +32,12 @@ from __future__ import annotations
 import bisect
 import math
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from dblink_spark.er.attributes import SimilarityFn
 
@@ -164,37 +173,13 @@ class AttributeIndex:
             self._value_to_id.update({v: i for i, v in enumerate(self.values.tolist())})
 
 
-def build_attribute_index(
-    domain_weights: DataFrame,
-    sim_fn: SimilarityFn,
-    precache_powers=None,
-) -> AttributeIndex:
-    """Build an AttributeIndex from a (value string, weight double) DataFrame.
+def _pair_query(dom_df: DataFrame, sim_fn: SimilarityFn) -> DataFrame:
+    """(a_id, b_id, exp_sim) for every pair of one domain with sim > 0.
 
-    The neighbor computation is a self crossJoin with a length-band prune
-    pushed *before* `F.levenshtein`, then a threshold filter — Catalyst plans
-    the whole thing; only surviving (a_id, b_id, expSim) triples reach the
-    driver.
+    A self-join of the (id, value) table with a length prune pushed *before*
+    `F.levenshtein`, then a threshold filter; Catalyst plans the whole
+    thing.
     """
-    dom = (
-        domain_weights.groupBy("value")
-        .agg(F.sum("weight").alias("weight"))
-        .orderBy("value")
-        .collect()
-    )
-    if not dom:
-        raise ValueError("index cannot be empty")
-    values = np.array([r["value"] for r in dom], dtype=object)
-    weights = np.array([r["weight"] for r in dom], dtype=np.float64)
-    probs = weights / weights.sum()
-
-    if sim_fn.is_constant:
-        return AttributeIndex(values=values, probs=probs, is_constant=True)
-
-    spark = domain_weights.sparkSession
-    dom_df = spark.createDataFrame(
-        [(int(i), str(v)) for i, v in enumerate(values)], "id int, value string"
-    )
     # per-side pruning key (e.g. Levenshtein's 64-bit char-presence mask):
     # computed ONCE per domain value here, instead of per candidate pair —
     # |dom| evaluations, not |dom|^2
@@ -246,26 +231,79 @@ def build_attribute_index(
                 F.col("a_pk"), F.col("b_pk"), F.length("a_value"), F.length("b_value")
             )
         )
-    pairs_df = (
+    return (
         pairs_df.withColumn("sim", sim_fn.column(F.col("a_value"), F.col("b_value")))
         .filter(F.col("sim") > 0.0)
         .select("a_id", "b_id", F.exp("sim").alias("exp_sim"))
     )
-    # Arrow transfer + vectorized CSR grouping: a realistic domain survives
-    # millions of neighbor pairs (1.85M for the 1M-record RLdata fname
-    # domain) and a per-Row Python loop dominated the whole index build;
-    # lexsort + bincount does the same grouping in ~100 ms. Per-a blocks
-    # are sorted by b_id exactly as the per-value argsort produced.
-    if hasattr(pairs_df, "toArrow"):
-        tbl = pairs_df.toArrow()
-        a_ids = np.asarray(tbl.column("a_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-        b_ids = np.asarray(tbl.column("b_id").to_numpy(zero_copy_only=False), dtype=np.int64)
-        sims = np.asarray(tbl.column("exp_sim").to_numpy(zero_copy_only=False), dtype=np.float64)
-    else:  # pragma: no cover - pre-Arrow fallback
-        rows = pairs_df.collect()
-        a_ids = np.array([r["a_id"] for r in rows], dtype=np.int64)
-        b_ids = np.array([r["b_id"] for r in rows], dtype=np.int64)
-        sims = np.array([r["exp_sim"] for r in rows], dtype=np.float64)
+
+
+def _neighbor_pairs(
+    spark: SparkSession, domains: dict[int, tuple[np.ndarray, SimilarityFn]]
+) -> dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Neighbor pairs of several domains, keyed by attribute id, in ONE job.
+
+    Every domain goes into one (attr_id, id, value) table built from Arrow
+    (a list-built table goes through a Python RDD, which measured about 3x
+    slower per broadcast join). Each attribute's pair query runs against its
+    own slice of that table, tagged with its attr_id, and the union comes
+    back in a single `toArrow`.
+    """
+    if not domains:
+        return {}
+    keys = list(domains)
+    lens = [len(domains[k][0]) for k in keys]
+    dom_df = spark.createDataFrame(
+        pa.table(
+            {
+                "attr_id": pa.array(np.repeat(keys, lens), pa.int32()),
+                "id": pa.array(np.concatenate([np.arange(n) for n in lens]), pa.int32()),
+                "value": pa.array(
+                    [v for k in keys for v in domains[k][0].tolist()], pa.string()
+                ),
+            }
+        )
+    )
+    queries = [
+        _pair_query(
+            dom_df.filter(F.col("attr_id") == k).select("id", "value"), domains[k][1]
+        ).select(F.lit(k).alias("attr_id"), "a_id", "b_id", "exp_sim")
+        for k in keys
+    ]
+    tbl = reduce(DataFrame.unionAll, queries).toArrow()
+    attr_ids, a_ids, b_ids, sims = (
+        tbl.column(c).to_numpy(zero_copy_only=False)
+        for c in ("attr_id", "a_id", "b_id", "exp_sim")
+    )
+    out = {}
+    for k in keys:
+        mask = attr_ids == k
+        out[k] = (
+            a_ids[mask].astype(np.int64),
+            b_ids[mask].astype(np.int64),
+            sims[mask].astype(np.float64),
+        )
+    return out
+
+
+def _index_from_pairs(
+    values: np.ndarray,
+    weights: np.ndarray,
+    pairs: tuple[np.ndarray, np.ndarray, np.ndarray] | None,
+    precache_powers=None,
+) -> AttributeIndex:
+    """The index of a sorted domain from its (a_id, b_id, exp_sim) neighbor
+    pairs, in any order; ``pairs`` is None for a constant similarity.
+
+    Vectorized CSR grouping: a realistic domain survives millions of
+    neighbor pairs (1.85M for the 1M-record RLdata fname domain) and a
+    per-pair Python loop dominated the whole index build; lexsort + bincount
+    does the same grouping in ~100 ms, each a-block sorted by b_id.
+    """
+    probs = weights / weights.sum()
+    if pairs is None:
+        return AttributeIndex(values=values, probs=probs, is_constant=True)
+    a_ids, b_ids, sims = pairs
     order = np.lexsort((b_ids, a_ids))
     a_ids, b_ids, sims = a_ids[order], b_ids[order], sims[order]
     offsets = np.concatenate(
@@ -298,6 +336,49 @@ def build_attribute_index(
     return idx
 
 
+def build_attribute_indexes(
+    spark: SparkSession,
+    domains: list[tuple[np.ndarray, np.ndarray]],
+    sim_fns: list[SimilarityFn],
+    precache_powers=None,
+) -> list[AttributeIndex]:
+    """One index per attribute from its (values sorted ascending, weights)
+    domain; the neighbor pairs of all attributes come from one Spark job."""
+    if any(len(values) == 0 for values, _ in domains):
+        raise ValueError("index cannot be empty")
+    pairs = _neighbor_pairs(
+        spark,
+        {
+            k: (values, sim_fn)
+            for k, ((values, _), sim_fn) in enumerate(zip(domains, sim_fns))
+            if not sim_fn.is_constant
+        },
+    )
+    return [
+        _index_from_pairs(values, weights, pairs.get(k), precache_powers)
+        for k, (values, weights) in enumerate(domains)
+    ]
+
+
+def build_attribute_index(
+    domain_weights: DataFrame,
+    sim_fn: SimilarityFn,
+    precache_powers=None,
+) -> AttributeIndex:
+    """Build an AttributeIndex from a (value string, weight double) DataFrame."""
+    dom = (
+        domain_weights.groupBy("value")
+        .agg(F.sum("weight").alias("weight"))
+        .orderBy("value")
+        .collect()
+    )
+    values = np.array([r["value"] for r in dom], dtype=object)
+    weights = np.array([r["weight"] for r in dom], dtype=np.float64)
+    return build_attribute_indexes(
+        domain_weights.sparkSession, [(values, weights)], [sim_fn], precache_powers
+    )[0]
+
+
 def build_attribute_index_local(
     values_weights: dict[str, float],
     sim_fn: SimilarityFn,
@@ -310,35 +391,12 @@ def build_attribute_index_local(
         raise ValueError("index cannot be empty")
     values = np.array([v for v, _ in items], dtype=object)
     weights = np.array([w for _, w in items], dtype=np.float64)
-    probs = weights / weights.sum()
-    if sim_fn.is_constant:
-        return AttributeIndex(values=values, probs=probs, is_constant=True)
-
-    n = len(values)
-    neighbor_ids = []
-    neighbor_expsims = []
-    for i in range(n):
-        ids = []
-        sims = []
-        for j in range(n):
-            s = sim_fn.similarity(values[i], values[j])
-            if s > 0.0:
-                ids.append(j)
-                sims.append(math.exp(s))
-        neighbor_ids.append(np.array(ids, dtype=np.int64))
-        neighbor_expsims.append(np.array(sims, dtype=np.float64))
-    sim_norms = np.empty(n, dtype=np.float64)
-    for v in range(n):
-        extra = float(np.sum(probs[neighbor_ids[v]] * (neighbor_expsims[v] - 1.0)))
-        sim_norms[v] = 1.0 / (1.0 + extra)
-    idx = AttributeIndex(
-        values=values,
-        probs=probs,
-        is_constant=False,
-        neighbor_ids=neighbor_ids,
-        neighbor_expsims=neighbor_expsims,
-        sim_norms=sim_norms,
-    )
-    if precache_powers:
-        idx.precache_powers(precache_powers)
-    return idx
+    pairs = None
+    if not sim_fn.is_constant:
+        n = len(values)
+        sims = np.array(
+            [[sim_fn.similarity(values[i], values[j]) for j in range(n)] for i in range(n)]
+        )
+        a_ids, b_ids = np.nonzero(sims > 0.0)
+        pairs = (a_ids, b_ids, np.array([math.exp(s) for s in sims[a_ids, b_ids]]))
+    return _index_from_pairs(values, weights, pairs, precache_powers)

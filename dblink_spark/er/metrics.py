@@ -1,12 +1,14 @@
 """Evaluation metrics: pairwise precision/recall/F, contingency table,
 adjusted Rand index (ref: analysis/PairwiseMetrics.scala,
 BinaryConfusionMatrix.scala, ClusteringContingencyTable.scala,
-ClusteringMetrics.scala). All reductions are DataFrame aggregations."""
+ClusteringMetrics.scala). The reductions are DataFrame aggregations; the
+ARI's small contingency table is summed on the driver."""
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -61,30 +63,29 @@ def contingency_table(pred_membership: DataFrame, true_membership: DataFrame) ->
 
 
 def adjusted_rand_index(table: DataFrame) -> float:
-    """ARI from the sparse contingency table — three aggregations + driver
-    formula (ref: ClusteringMetrics.scala:42-83, E5)."""
-    comb2 = lambda c: (c * (c - 1) / 2)  # noqa: E731
+    """ARI from the sparse contingency table, collected once through Arrow;
+    the three pair counts and the formula run on the driver
+    (ref: ClusteringMetrics.scala:42-83, E5). The pair counts are integers
+    below 2^53, so their float values are exact."""
+    tbl = table.select("pred_uid", "true_uid", "n_common").toArrow()
+    n_common = tbl.column("n_common").to_numpy().astype(np.int64)
 
-    total_comb = table.agg(
-        F.sum(comb2(F.col("n_common"))).alias("s"),
-        F.sum("n_common").alias("n"),
-    ).collect()[0]
-    pred_comb = (
-        table.groupBy("pred_uid")
-        .agg(F.sum("n_common").alias("c"))
-        .agg(F.sum(comb2(F.col("c"))).alias("s"))
-        .collect()[0]["s"]
-    )
-    true_comb = (
-        table.groupBy("true_uid")
-        .agg(F.sum("n_common").alias("c"))
-        .agg(F.sum(comb2(F.col("c"))).alias("s"))
-        .collect()[0]["s"]
-    )
-    total = float(total_comb["s"] or 0)
-    n = float(total_comb["n"] or 0)
-    expected = float(pred_comb) * float(true_comb) / comb2(n) if n >= 2 else 0.0
-    max_index = (float(pred_comb) + float(true_comb)) / 2.0
+    def pairs_within(uid: str) -> float:
+        """Σ C(c, 2) over the row sums c of one side's clusters."""
+        uids, inverse = np.unique(
+            tbl.column(uid).to_numpy(zero_copy_only=False), return_inverse=True
+        )
+        c = np.zeros(len(uids), dtype=np.int64)
+        np.add.at(c, inverse, n_common)
+        return float(np.sum(c * (c - 1) // 2))
+
+    comb2 = lambda c: (c * (c - 1) / 2)  # noqa: E731
+    total = float(np.sum(n_common * (n_common - 1) // 2))
+    n = float(np.sum(n_common))
+    pred_comb = pairs_within("pred_uid")
+    true_comb = pairs_within("true_uid")
+    expected = pred_comb * true_comb / comb2(n) if n >= 2 else 0.0
+    max_index = (pred_comb + true_comb) / 2.0
     if max_index == expected:
         # Degenerate: both clusterings are all-singletons (or single-cluster)
         # and therefore identical — ARI is 1 by convention (sklearn agrees).

@@ -62,7 +62,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dblink_spark.er.cache import RecordsCache, encode_records
+from dblink_spark.er.cache import RecordsCache
 from dblink_spark.operators.workerboot import make_worker_boot
 from dblink_spark.er.model import (
     PartitionState,
@@ -1801,79 +1801,112 @@ def init_state(
 
     The reference initializes per-RDD-partition with a bin-packing heuristic
     (State.scala:244-270); a stable global row_number gives the same model
-    semantics with cleaner determinism.
+    semantics with cleaner determinism. Records are dictionary-encoded and
+    given their partition ids inside the init map itself, and the state is
+    checkpointed once.
     """
-    # One agg job both sizes the problem and enforces the reference's
-    # documented-but-unchecked precondition that rec_id is globally unique
-    # (Project.scala:39): canonicalize_partition_state's determinism (and
-    # with it the retry/AQE-proof claim) relies on rec_id sort keys being
-    # collision-free, so duplicates must fail fast here, not corrupt chains.
+    # One agg job sizes the problem and checks the records it is given:
+    # every rec_id present and globally unique (the reference documents but
+    # never checks this, Project.scala:39 — canonicalize_partition_state's
+    # determinism, and with it the retry/AQE-proof claim, relies on rec_id
+    # sort keys being collision-free), and every file_id one the cache knows.
     counts = records.agg(
-        F.count("*").alias("n"), F.count_distinct("rec_id").alias("n_ids")
+        F.count("*").alias("n"),
+        F.count("rec_id").alias("n_present"),
+        F.count_distinct("rec_id").alias("n_ids"),
+        F.count_if(
+            ~F.coalesce(F.col("file_id").isin(cache.file_ids), F.lit(False))
+        ).alias("n_unknown_file"),
     ).first()
     n_records = counts["n"]
+    if counts["n_present"] != n_records:
+        raise ValueError(
+            f"rec_id is missing on {n_records - counts['n_present']} records"
+        )
     if counts["n_ids"] != n_records:
         raise ValueError(
             f"rec_id must be globally unique across files: {n_records} records "
             f"but only {counts['n_ids']} distinct rec_ids (ref: Project.scala:39)"
         )
+    if counts["n_unknown_file"]:
+        raise ValueError(
+            f"{counts['n_unknown_file']} records have a file_id outside the "
+            f"records cache's files {cache.file_ids}"
+        )
     pop = population_size if population_size is not None else n_records
     if pop <= 0:
         raise ValueError("population size must be positive")
 
-    encoded = encode_records(records, cache)
-    file_index = {fid: i for i, fid in enumerate(cache.file_ids)}
     num_attrs = cache.num_attributes
-    indexes = cache.indexes
+    probs = [idx.probs for idx in cache.indexes]
+    # a value's id is its rank in the sorted domain (AttributeIndex.values)
+    value_sets = [pa.array(idx.values.tolist(), pa.string()) for idx in cache.indexes]
+    file_set = pa.array(cache.file_ids, pa.string())
+    attr_names = [a.name for a in cache.attributes]
+    strings = records.select(
+        *[F.col(c).cast("string") for c in ["rec_id", "file_id"] + attr_names]
+    )
 
-    def _impute_and_cluster(vals: np.ndarray, rec_rows: pd.DataFrame, rng):
-        """One cluster row from a group of records (first record seeds the
-        entity values; missing imputed from the empirical distributions)."""
-        ent_values = vals[0].copy()
+    def encode(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
+        """(values (n, A) int32, missing = -1; file indexes (n,) int32)."""
+        import pyarrow.compute as pc
+
+        def ids(col: pa.Array, value_set: pa.Array) -> np.ndarray:
+            pos = pc.index_in(col, value_set=value_set.cast(col.type))
+            return pos.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int32)
+
+        vals = np.empty((batch.num_rows, num_attrs), dtype=np.int32)
+        for a, name in enumerate(attr_names):
+            vals[:, a] = ids(batch.column(name), value_sets[a])
+        return vals, ids(batch.column("file_id"), file_set)
+
+    def impute(ent_values: np.ndarray, rng: np.random.Generator) -> None:
+        """Fill the missing (-1) entity values in place from the empirical
+        distributions, attribute by attribute."""
         for a in range(num_attrs):
             if ent_values[a] < 0:
-                ent_values[a] = sample_from_probs(rng, indexes[a].probs, 1)[0]
-        dist = (vals >= 0) & (vals != ent_values[None, :])
-        return {
-            "partition_id": 0,
-            "is_summary": False,
-            "ent_values": ent_values.tolist(),
-            "rec_ids": rec_rows["rec_id"].tolist(),
-            "rec_fids": [file_index[f] for f in rec_rows["file_id"]],
-            "rec_values": vals.astype("<i4").tobytes(),
-            "rec_dist": dist.astype(np.uint8).tobytes(),
-            "loglik": None,
-            "n_isolates": None,
-            "agg_dist": None,
-            "rec_dist_hist": None,
-        }
+                ent_values[a] = sample_from_probs(rng, probs[a], 1)[0]
 
+    def clusters_table(
+        ents: np.ndarray, link: np.ndarray, rec_ids, fids: np.ndarray,
+        vals: np.ndarray,
+    ) -> pa.Table:
+        """Cluster rows of entities ``ents`` and the records linked to them."""
+        ps = PartitionState(
+            entities=ents,
+            rec_ids=np.asarray(rec_ids, dtype=str),
+            rec_fids=fids,
+            rec_values=vals,
+            rec_dist=(vals >= 0) & (vals != ents[link]),
+            link=link,
+        )
+        return _ps_cluster_body_pa(ps, partition_fn(ents))
+
+    boot = make_worker_boot()
     if pop >= n_records:
         # Fast path (the common case): every record seeds its own entity —
-        # no shuffle at all, one mapInPandas over the encoded records.
-        # Imputation RNG is keyed on (seed, crc32(rec_id)) so results do not
-        # depend on input partitioning.
+        # no shuffle at all, one map over the records. Imputation RNG is
+        # keyed on (seed, crc32(rec_id)) so results do not depend on input
+        # partitioning.
         import zlib
-
-        boot = make_worker_boot()
 
         def init_map(batches):
             boot()  # operators/workerboot.py
-            for pdf in batches:
-                rows = []
-                for i in range(len(pdf)):
-                    vals = np.asarray(pdf["values"].iloc[i], dtype=np.int32).reshape(
-                        1, num_attrs
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                vals, fids = encode(batch)
+                rec_ids = batch.column("rec_id").to_pylist()
+                ents = vals.copy()
+                for i in np.flatnonzero((vals < 0).any(axis=1)):
+                    impute(
+                        ents[i],
+                        np.random.default_rng((seed, zlib.crc32(rec_ids[i].encode()))),
                     )
-                    rng = np.random.default_rng(
-                        (seed, zlib.crc32(str(pdf["rec_id"].iloc[i]).encode()))
-                    )
-                    rows.append(_impute_and_cluster(vals, pdf.iloc[i : i + 1], rng))
-                yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                    columns=[f.name for f in STATE_SCHEMA.fields]
-                )
+                link = np.arange(len(ents), dtype=np.int64)
+                yield from clusters_table(ents, link, rec_ids, fids, vals).to_batches()
 
-        clusters = encoded.mapInPandas(init_map, STATE_SCHEMA)
+        clusters = strings.mapInArrow(init_map, STATE_SCHEMA)
     else:
         # pop < n_records: records share entities round-robin over a stable
         # global order (ref: State.scala:276 `i mod numEntities`).
@@ -1883,140 +1916,134 @@ def init_state(
         # distributed: range-repartition on the sort key (partition i holds
         # keys < partition i+1 — a total order since (file_id, rec_id) is
         # unique), count per partition, prefix-sum the tiny count vector on
-        # the driver, then stamp __ridx = offset[pid] + local position with
-        # a narrow mapInPandas. Two jobs over a checkpointed input, no
+        # the driver, then encode and stamp __ridx = offset[pid] + local
+        # position with a narrow map. Two jobs over a checkpointed input, no
         # single-partition exchange anywhere.
         n_parts = max(int(spark.sparkContext.defaultParallelism), 1)
         ordered = (
-            encoded.repartitionByRange(n_parts, "file_id", "rec_id")
+            strings.repartitionByRange(n_parts, "file_id", "rec_id")
             .sortWithinPartitions("file_id", "rec_id")
             .withColumn("__pid", F.spark_partition_id())
             .localCheckpoint(eager=True)
         )
-        counts = {
+        part_counts = {
             r["__pid"]: r["cnt"]
             for r in ordered.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
         }
         offsets: dict[int, int] = {}
         acc = 0
-        for p in sorted(counts):
+        for p in sorted(part_counts):
             offsets[p] = acc
-            acc += counts[p]
-
-        ridx_schema = ordered.withColumn("__ridx", F.lit(0).cast("long")).schema
-
-        boot = make_worker_boot()
+            acc += part_counts[p]
 
         def stamp_ridx(batches):
             boot()  # operators/workerboot.py
-            seen = 0  # mapInPandas runs once per partition: counter is local
-            for pdf in batches:
-                if len(pdf) == 0:
+            seen = 0  # mapInArrow runs once per partition: counter is local
+            for batch in batches:
+                if batch.num_rows == 0:
                     continue
-                base = offsets[int(pdf["__pid"].iloc[0])]
-                pdf = pdf.copy()
-                pdf["__ridx"] = base + seen + np.arange(len(pdf), dtype=np.int64)
-                seen += len(pdf)
-                yield pdf
+                vals, fids = encode(batch)
+                base = offsets[batch.column("__pid")[0].as_py()]
+                ridx = base + seen + np.arange(batch.num_rows, dtype=np.int64)
+                seen += batch.num_rows
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(ridx % pop),
+                        pa.array(ridx),
+                        batch.column("rec_id"),
+                        pa.array(fids),
+                        pa.ListArray.from_arrays(
+                            pa.array(np.arange(len(vals) + 1, dtype=np.int32) * num_attrs),
+                            pa.array(vals.ravel()),
+                        ),
+                    ],
+                    names=["__ent", "__ridx", "rec_id", "fid", "values"],
+                )
 
-        numbered = ordered.mapInPandas(stamp_ridx, ridx_schema).withColumn(
-            "__ent", (F.col("__ridx") % pop).cast("long")
+        numbered = ordered.mapInArrow(
+            stamp_ridx,
+            "__ent long, __ridx long, rec_id string, fid int, values array<int>",
         )
 
-        boot = make_worker_boot()
-
-        def init_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        def init_kernel(key: tuple, tbl: pa.Table) -> pa.Table:
             boot()  # operators/workerboot.py
-            rng = np.random.default_rng((seed, int(key[0])))
-            pdf = pdf.sort_values("__ridx")
-            vals = np.stack([np.asarray(v, dtype=np.int32) for v in pdf["values"]])
-            return pd.DataFrame([_impute_and_cluster(vals, pdf, rng)])
+            rng = np.random.default_rng((seed, key[0].as_py()))
+            tbl = tbl.sort_by("__ridx")
+            vals = (
+                tbl.column("values").combine_chunks().flatten()
+                .to_numpy(zero_copy_only=False).astype(np.int32)
+                .reshape(tbl.num_rows, num_attrs)
+            )
+            # the first record seeds the entity
+            ents = vals[:1].copy()
+            impute(ents[0], rng)
+            return clusters_table(
+                ents,
+                np.zeros(tbl.num_rows, dtype=np.int64),
+                tbl.column("rec_id").to_pylist(),
+                tbl.column("fid").to_numpy().astype(np.int32),
+                vals,
+            )
 
-        clusters = numbered.groupBy("__ent").applyInPandas(init_kernel, STATE_SCHEMA)
+        clusters = numbered.groupBy("__ent").applyInArrow(init_kernel, STATE_SCHEMA)
 
     if pop > n_records:
-        # isolates with empirical random values
-        iso_rows = []
+        # isolates with empirical random values, built on the driver
         rng = np.random.default_rng(seed + pop)
-        for e in range(n_records, pop):
-            ent_values = [
-                int(sample_from_probs(rng, indexes[a].probs, 1)[0])
-                for a in range(num_attrs)
-            ]
-            iso_rows.append(
-                (0, False, ent_values, [], [], b"", b"", None, None, None, None)
-            )
-        clusters = clusters.unionByName(spark.createDataFrame(iso_rows, STATE_SCHEMA))
+        ents = np.empty((pop - n_records, num_attrs), dtype=np.int32)
+        for e in range(len(ents)):
+            for a in range(num_attrs):
+                ents[e, a] = sample_from_probs(rng, probs[a], 1)[0]
+        isolates = clusters_table(
+            ents,
+            np.empty(0, dtype=np.int64),
+            [],
+            np.empty(0, dtype=np.int32),
+            np.empty((0, num_attrs), dtype=np.int32),
+        )
+        clusters = clusters.unionByName(
+            spark.createDataFrame(isolates, schema=STATE_SCHEMA)
+        )
 
-    # assign entity-space partitions via the fitted partition function
-    # (mapInPandas: narrow, no shuffle — the first groupBy in transition()
-    # does the co-location shuffle)
-    boot = make_worker_boot()
-
-    def assign_pid(batches):
-        boot()  # operators/workerboot.py
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ents = np.stack([np.asarray(v, dtype=np.int32) for v in pdf["ent_values"]])
-            pdf = pdf.copy()
-            pdf["partition_id"] = partition_fn(ents).astype(np.int32)
-            yield pdf
-
-    clusters = clusters.mapInPandas(assign_pid, STATE_SCHEMA)
     state_df = clusters.localCheckpoint(eager=True)
 
-    # initial summaries: distortion counts via a distributed partial count
-    # over the packed rec_dist blobs — one bincount per Arrow batch, a tiny
-    # (fid, pos, cnt) frame shuffled to the final groupBy
+    # initial summaries from ONE collect of per-batch partial counts: the
+    # isolates and the distortion counts over the packed rec_dist blobs
     # (loglik is reported from iteration 1; θ only needs agg_dist)
     A, Fn = num_attrs, len(cache.file_ids)
 
-    boot = make_worker_boot()
+    def partial_counts(batches):
+        import pyarrow.compute as pc
 
-    def dist_counts(batches):
         boot()  # operators/workerboot.py
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            fids = np.concatenate(
-                [np.asarray(f, dtype=np.int64) for f in pdf["rec_fids"]]
-            ) if len(pdf) else np.empty(0, dtype=np.int64)
-            if fids.size == 0:
-                continue
-            dist = np.frombuffer(
-                b"".join(bytes(d) for d in pdf["rec_dist"]), dtype=np.uint8
+        for batch in batches:
+            fids = batch.column("rec_fids").flatten().to_numpy(zero_copy_only=False)
+            dist = _binary_column_to_array(
+                pa.chunked_array([batch.column("rec_dist")]), np.uint8, fids.size * A
             ).reshape(-1, A)
             # key = fid * A + pos, counted only where distorted
-            keys = (fids[:, None] * A + np.arange(A)[None, :])[dist.astype(bool)]
-            cnt = np.bincount(keys, minlength=Fn * A)
-            nz = np.flatnonzero(cnt)
-            yield pd.DataFrame(
-                {
-                    "fid": (nz // A).astype(np.int64),
-                    "pos": (nz % A).astype(np.int64),
-                    "cnt": cnt[nz].astype(np.int64),
-                }
+            keys = (fids.astype(np.int64)[:, None] * A + np.arange(A))[dist.astype(bool)]
+            n_iso = pc.sum(pc.equal(pc.list_value_length(batch.column("rec_ids")), 0))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([n_iso.as_py() or 0], pa.int64()),
+                    pa.array([np.bincount(keys, minlength=Fn * A)], pa.list_(pa.int64())),
+                ],
+                names=["n_isolates", "agg_dist"],
             )
 
-    pairs = (
-        state_df.filter(~F.col("is_summary"))
-        .select("rec_fids", "rec_dist")
-        .mapInPandas(dist_counts, "fid long, pos long, cnt long")
-        .groupBy("fid", "pos")
-        .agg(F.sum("cnt").alias("count"))
+    partials = (
+        state_df.select("rec_ids", "rec_fids", "rec_dist")
+        .mapInArrow(partial_counts, "n_isolates long, agg_dist array<long>")
         .collect()
     )
-    agg = np.zeros((A, Fn), dtype=np.int64)
-    for r in pairs:
-        agg[r["pos"], r["fid"]] = r["count"]
-    n_iso = state_df.filter(
-        ~F.col("is_summary") & (F.size("rec_ids") == 0)
-    ).count()
+    agg = np.zeros(Fn * A, dtype=np.int64)
+    for r in partials:
+        agg += np.asarray(r["agg_dist"], dtype=np.int64)
     summary = SummaryVars(
-        num_isolates=int(n_iso),
+        num_isolates=sum(r["n_isolates"] for r in partials),
         log_likelihood=float("nan"),
-        agg_distortions=agg,
+        agg_distortions=agg.reshape(Fn, A).T.copy(),
         rec_distortions=np.zeros(A + 1, dtype=np.int64),
     )
 
