@@ -137,8 +137,11 @@ class AttributeIndex:
           S        flat per-segment prefix sums of the θ-free perturbation
           T0       (V,) θ-free segment totals
           pos      (V,) local index of v inside its own segment
+          keys     flat ``owner*V + ids``, ascending: one searchsorted finds
+                   any (value, neighbor) pair
         """
-        if self._k1_csr is None:
+        # a cache pickled before the pair keys existed rebuilds its tables
+        if self._k1_csr is None or "keys" not in self._k1_csr:
             if self.is_constant:
                 raise ValueError("constant index has no neighbor structure")
             base = self.sim_norm_dist(1)
@@ -165,6 +168,7 @@ class AttributeIndex:
                 "S": S,
                 "T0": S[off[1:] - 1],
                 "pos": pos,
+                "keys": owner * self.num_values + ids,
             }
         return self._k1_csr
 

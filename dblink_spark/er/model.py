@@ -8,11 +8,20 @@ Same model semantics, different execution strategy:
   *vectorized across records*: within one sweep the entity attribute values
   and the inverted index are fixed, so every record's conditional is
   independent — we evaluate weight matrices chunk-wise and draw one
-  categorical per row (ref loop: GibbsUpdates.scala:177-183).
-- The entity-value update loops over entities but batches all isolated /
-  unobserved cases into single vectorized draws.
+  categorical per row (ref loop: GibbsUpdates.scala:177-183). The indexed
+  update groups records by exact-match column mask and draws every
+  similarity-weighted record of a mask from one padded weight matrix.
+- The collapsed entity-value update (PCG-I/II) is batched per attribute
+  and cluster size: singletons, each k ≥ 2 cluster size, and the rejected
+  draws of both are each one vectorized pass. The Gibbs and
+  Gibbs-Sequential value updates loop over entities.
 - The distortion update is fully vectorized over (record, attribute)
   (ref: GibbsUpdates.scala:324-359).
+
+The batched passes draw the same RNG values and do the same floating-point
+operations in the same order as per-record loops would, so chains are
+bit-identical to the record-at-a-time formulation (pinned against those
+loops in tests/test_er_kernel_parity.py).
 
 Sampler variants (ref: ProjectStep.scala:53-58, Sampler.scala:58-60):
   "PCG-I"            collapsed entity values, indexed Gibbs link update
@@ -33,6 +42,8 @@ from dblink_spark.er.rand import sample_from_probs, sample_rows
 SAMPLERS = ("PCG-I", "PCG-II", "Gibbs", "Gibbs-Sequential")
 
 _LINK_CHUNK = 2048
+#: padded (record, candidate) cells per chunk of the weighted link draw
+_LINK_CELLS = 1 << 18
 
 
 @dataclass
@@ -146,16 +157,16 @@ def concat_partition_states(parts: list[PartitionState]) -> PartitionState:
     )
 
 
-def _expsim_lookup(index, value: int, ent_col: np.ndarray) -> np.ndarray:
-    """exp(sim(value, w)) for each w in ent_col; 1.0 for non-neighbors."""
-    out = np.ones(ent_col.shape[0], dtype=np.float64)
-    nbr = index.neighbor_ids[value]
-    if len(nbr):
-        pos = np.searchsorted(nbr, ent_col)
-        pos_c = np.clip(pos, 0, len(nbr) - 1)
-        hit = nbr[pos_c] == ent_col
-        out[hit] = index.neighbor_expsims[value][pos_c[hit]]
-    return out
+def _expsim_pairs(idx, v, e) -> np.ndarray:
+    """exp(sim(v, e)) elementwise over value ids ``v`` and ``e`` (numpy
+    broadcasting); 1.0 for non-neighbors. One searchsorted of ``v·V + e``
+    against the CSR's ascending composite keys, values read from its
+    ``exps`` — the same numbers as ``neighbor_expsims``."""
+    csr = idx.collapsed_k1_csr()
+    keys = csr["keys"]
+    q = np.asarray(v, dtype=np.int64) * idx.num_values + e
+    pos = np.minimum(np.searchsorted(keys, q), keys.size - 1)
+    return np.where(keys[pos] == q, csr["exps"][pos], 1.0)
 
 
 class _ExpSimCache:
@@ -171,7 +182,7 @@ class _ExpSimCache:
         key = (attr_id, value)
         vec = self._store.get(key)
         if vec is None:
-            vec = _expsim_lookup(
+            vec = _expsim_pairs(
                 self._cache.indexes[attr_id], value, self._entities[:, attr_id]
             )
             self._store[key] = vec
@@ -249,7 +260,12 @@ def update_links_indexed(
     sets — entities equal to the record on every observed non-distorted
     attribute — via one lexicographic entity sort per distinct exact-match
     column mask and a batched searchsorted, which replaces the per-record
-    Python intersection loop with O(masks) vectorized passes."""
+    Python intersection loop with O(masks) vectorized passes. Only entities
+    whose key some record of the mask carries are sorted. Records with a
+    distorted similarity-indexed attribute draw from weighted candidates in
+    one :func:`_weighted_link_picks` pass per mask; the rest draw uniformly.
+    Both consume the record's own uniform, so the chain does not depend on
+    how records are grouped."""
     A = cache.num_attributes
     R = ps.num_records
     E = ps.num_entities
@@ -278,7 +294,8 @@ def update_links_indexed(
     # pick for equal weights), so only similarity-indexed distortions
     # need per-record weighting.
     nonconst = np.array([not ix.is_constant for ix in cache.indexes], dtype=bool)
-    needs_w = (obs & ps.rec_dist & nonconst[None, :]).any(axis=1)
+    weighted = obs & ps.rec_dist & nonconst[None, :]  # (R, A)
+    needs_w = weighted.any(axis=1)
 
     ents32 = np.ascontiguousarray(ps.entities, dtype=np.int32)
     vals32 = np.ascontiguousarray(ps.rec_values, dtype=np.int32)
@@ -313,7 +330,13 @@ def update_links_indexed(
                 rkeys = (
                     np.ascontiguousarray(vals32[rsel][:, cols]).view(void).ravel()
                 )
-            ent_order = np.argsort(ekeys, kind="stable")
+            # only entities whose key some record of the mask carries can
+            # be candidates: filter them in entity order, then sort those
+            urk = np.unique(rkeys)
+            at = np.minimum(np.searchsorted(urk, ekeys), urk.size - 1)
+            hits = np.flatnonzero(urk[at] == ekeys)
+            by_key = np.argsort(ekeys[hits], kind="stable")
+            ent_order = hits[by_key]
             sek = ekeys[ent_order]
             lo = np.searchsorted(sek, rkeys, "left")
             hi = np.searchsorted(sek, rkeys, "right")
@@ -328,24 +351,67 @@ def update_links_indexed(
             # u in [0,1): floor(u*n) is the uniform (== equal-weight) pick
             pick = lo[plain] + (u[pr] * sizes[plain]).astype(np.int64)
             new_link[pr] = ent_order[pick]
-        for j in np.flatnonzero(~plain):
-            r = rsel[j]
-            cands = ent_order[lo[j] : hi[j]]
-            w = np.ones(cands.shape[0], dtype=np.float64)
-            for a in np.flatnonzero(obs[r] & ps.rec_dist[r] & nonconst):
-                idx = cache.indexes[a]
-                v = int(ps.rec_values[r, a])
-                ent_col = ps.entities[cands, a]
-                w *= (
-                    idx.probs[v]
-                    * idx.sim_norms[ent_col]
-                    * _expsim_lookup(idx, v, ent_col)
-                )
-            cdf = np.cumsum(w)
-            if cdf[-1] <= 0:
-                raise RuntimeError("zero total weight in link update")
-            new_link[r] = cands[np.searchsorted(cdf, u[r] * cdf[-1], "right")]
+        wj = np.flatnonzero(~plain)
+        if wj.size:
+            new_link[rsel[wj]] = _weighted_link_picks(
+                ps, cache, weighted, u, rsel[wj], lo[wj], sizes[wj], ent_order
+            )
     return new_link
+
+
+def _weighted_link_picks(
+    ps: PartitionState,
+    cache: RecordsCache,
+    weighted: np.ndarray,  # (R, A) bool: attrs that weight a record's candidates
+    u: np.ndarray,  # (R,) each record's uniform
+    recs: np.ndarray,  # (n,) the records to draw
+    lo: np.ndarray,  # (n,) start of each record's candidate run in ent_order
+    sizes: np.ndarray,  # (n,) run lengths, all > 0
+    ent_order: np.ndarray,
+) -> np.ndarray:
+    """Weighted inverse-CDF pick of one entity for each of ``recs`` from its
+    candidate run ``ent_order[lo : lo + size]``.
+
+    The runs are padded into a (records × longest run) matrix, records
+    sorted by run length and chunked so a chunk holds at most
+    ``_LINK_CELLS`` padded cells. Each row is multiplied by
+    ``probs[v] * sim_norms[e] * expsim(v, e)`` for its weighting attributes
+    in ascending attribute order, cumulated along the row (a sequential
+    accumulate, so each prefix sum equals the 1-D ``cumsum`` of the run bit
+    for bit) and the pick is the number of valid cells with
+    ``cdf <= u·total`` — ``searchsorted(cdf, u·total, "right")`` on a
+    non-decreasing row — clamped to the run's end."""
+    n = sizes.size
+    out = np.empty(n, dtype=np.int64)
+    by_size = np.argsort(sizes, kind="stable")
+    start = 0
+    while start < n:
+        # rows start..stop of the size order, padded to the last (widest)
+        sz = sizes[by_size[start:]]
+        fits = np.count_nonzero(np.arange(1, sz.size + 1) * sz <= _LINK_CELLS)
+        stop = start + max(1, int(fits))
+        rows = by_size[start:stop]
+        width = int(sizes[rows[-1]])
+        valid = np.arange(width) < sizes[rows, None]
+        cands = ent_order[np.where(valid, lo[rows, None] + np.arange(width), 0)]
+        w = np.ones(cands.shape, dtype=np.float64)
+        wr = weighted[recs[rows]]
+        for a in np.flatnonzero(wr.any(axis=0)):
+            sub = np.flatnonzero(wr[:, a])
+            idx = cache.indexes[a]
+            v = ps.rec_values[recs[rows[sub]], a][:, None]
+            ent_col = ps.entities[cands[sub], a]
+            w[sub] *= idx.probs[v] * idx.sim_norms[ent_col] * _expsim_pairs(idx, v, ent_col)
+        cdf = np.cumsum(w, axis=1)
+        last = sizes[rows] - 1
+        total = cdf[np.arange(rows.size), last]
+        if np.any(total <= 0):
+            raise RuntimeError("zero total weight in link update")
+        t = u[recs[rows]] * total
+        pick = np.count_nonzero((cdf <= t[:, None]) & valid, axis=1)
+        out[rows] = cands[np.arange(rows.size), np.minimum(pick, last)]
+        start = stop
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -453,7 +519,9 @@ def _draw_values_collapsed_k1(
     one attribute at once. The sparse perturbation vector depends only on
     (observed value, file), so it is computed once per distinct pair and
     shared; acceptance tests, base draws, and perturbation draws are each
-    one batched RNG call.
+    one batched RNG call. Rejected draws that leave the observed value search
+    their segments in one pass: each segment search is a count of the
+    segment's cells at or below the threshold.
     """
     n = r1.shape[0]
     v = vals_a[r1].astype(np.int64)
@@ -498,12 +566,21 @@ def _draw_values_collapsed_k1(
         s_before = S[np.maximum(gpos - 1, 0)]
         on_v = ((p == 0) | (s_before <= t)) & (S[gpos] > t - dr)
         res = vr.copy()
-        for i in np.flatnonzero(~on_v):
-            seg = S[o[i] : csr["off"][vr[i] + 1]]
-            pp = int(p[i])
-            c1 = int(np.searchsorted(seg[:pp], t[i], "right"))
-            c2 = max(0, int(np.searchsorted(seg, t[i] - dr[i], "right")) - pp)
-            res[i] = ids_flat[o[i] + c1 + c2]
+        off = np.flatnonzero(~on_v)
+        if off.size:
+            # every off-v draw at once over the cells of its segment:
+            #   c1 = searchsorted(seg[:pos], t, "right")
+            #   c2 = max(0, searchsorted(seg, t - delta, "right") - pos)
+            # as counts of cells at or below the threshold (S is
+            # non-decreasing within a segment)
+            so, sp = o[off], p[off]
+            owner, cell = _runs(so, csr["off"][vr[off] + 1] - so)
+            seg = S[cell]
+            in_c1 = ((cell - so[owner]) < sp[owner]) & (seg <= t[off][owner])
+            c1 = np.bincount(owner[in_c1], minlength=off.size)
+            in_c2 = seg <= (t[off] - dr[off])[owner]
+            c2 = np.bincount(owner[in_c2], minlength=off.size) - sp
+            res[off] = ids_flat[so + c1 + np.maximum(c2, 0)]
         out[rej] = res
     return out
 
@@ -528,7 +605,10 @@ def _draw_values_collapsed_kn(
     with one composite argsort, and merged with `multiply.reduceat` —
     replacing the per-entity Python dict merge. RNG layout: one batched
     accept draw, one batched base draw for acceptors, one batched uniform
-    for rejectors (entity-ascending), mirroring the other batch paths.
+    for rejectors (entity-ascending), mirroring the other batch paths. All
+    rejectors are resolved in one pass: the inverse-CDF pick in each
+    rejector's segment is the count of its cells with
+    ``cdf[j] - cdf[s-1] <= u2·total``, clamped to the segment's end.
 
     ``recs``: (nE, k) record row indices, one row per entity, entity-
     ascending; rows' linked records in grouped order.
@@ -546,16 +626,13 @@ def _draw_values_collapsed_kn(
         csr = idx.collapsed_k1_csr()
         o = csr["off"][v]
         L = csr["off"][v + 1] - o
-        total = int(L.sum())
-        flat_starts = np.cumsum(L) - L
-        within = np.arange(total, dtype=np.int64) - np.repeat(flat_starts, L)
-        gidx = np.repeat(o, L) + within
+        rec_rep, gidx = _runs(o, L)
         keys = csr["ids"][gidx]
-        fac = csr["exps"][gidx].copy()
-        fac[flat_starts + csr["pos"][v]] += (1.0 / th - 1.0) / (
+        fac = csr["exps"][gidx]
+        fac[np.cumsum(L) - L + csr["pos"][v]] += (1.0 / th - 1.0) / (
             idx.probs[v] * idx.sim_norms[v]
         )
-        ent_rep = np.repeat(np.repeat(np.arange(nE, dtype=np.int64), k), L)
+        ent_rep = rec_rep // k  # records are entity-major: row i*k..i*k+k-1
 
     comp = ent_rep * np.int64(idx.num_values) + keys
     order = np.argsort(comp, kind="stable")
@@ -579,13 +656,27 @@ def _draw_values_collapsed_kn(
     if rej.size:
         u2 = rng.random(rej.size)
         cdf = np.cumsum(pert)
-        ends = np.r_[ent_starts[1:], pert.size]
-        for j, i in enumerate(rej):
-            s, e2 = int(ent_starts[i]), int(ends[i])
-            seg = cdf[s:e2] - (cdf[s - 1] if s else 0.0)
-            pos = int(np.searchsorted(seg, u2[j] * totals[i], "right"))
-            out[i] = uk[s + min(pos, e2 - s - 1)]
+        # per rejector: searchsorted(cdf[s:e] - cdf[s-1], u2·total, "right")
+        # as a count over its segment's cells, clamped to the segment's end
+        s = ent_starts[rej]
+        lens = np.r_[ent_starts[1:], pert.size][rej] - s
+        owner, cell = _runs(s, lens)
+        below = np.where(s > 0, cdf[s - 1], 0.0)
+        hit = cdf[cell] - below[owner] <= (u2 * totals[rej])[owner]
+        pos = np.bincount(owner[hit], minlength=rej.size)
+        out[rej] = uk[s + np.minimum(pos, lens - 1)]
     return out
+
+
+def _runs(starts: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Flatten the runs ``[starts[i], starts[i] + lens[i])``: for each cell,
+    its run's index and its own index."""
+    owner = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+    cell = np.arange(owner.size, dtype=np.int64) + np.repeat(
+        starts - (np.cumsum(lens) - lens), lens
+    )
+    return owner, cell
+
 
 
 def _base_dist(idx, k: int) -> np.ndarray:
@@ -597,9 +688,9 @@ def _draw_value_collapsed(rng, idx, attr_id, rows, vals_a, rec_fids, theta, k):
     (ref: GibbsUpdates.scala:576-599 + perturbedDistYCollapsed :534-570).
 
     The kernel hot path uses the batched :func:`_draw_values_collapsed_k1`
-    for singletons and :func:`_draw_value_collapsed_general` for k ≥ 2;
-    this scalar form is retained as the distribution oracle the batch path
-    is pinned against in tests/test_er_kernel_dist.py."""
+    for singletons and :func:`_draw_values_collapsed_kn` for k ≥ 2; this
+    scalar form is retained as the distribution oracle the batch paths are
+    pinned against in tests/test_er_kernel_dist.py."""
     base = _base_dist(idx, k)
     if k == 1:
         # Fast path for the dominant case (singleton clusters): the sparse
@@ -798,10 +889,7 @@ def partition_summary(
             p = idx.probs[v]
             if not idx.is_constant:
                 ev = ent_for_rec[obs_dist, a]
-                expsims = np.array(
-                    [idx.exp_sim_of(int(rv), int(e)) for rv, e in zip(v, ev)]
-                )
-                p = p * idx.sim_norms[ev] * expsims
+                p = p * idx.sim_norms[ev] * _expsim_pairs(idx, v, ev)
             loglik += float(np.log(p).sum())
 
     rec_dist_hist = np.bincount(

@@ -40,6 +40,7 @@ documents the weaker guarantee, State.scala:47-49).
 
 from __future__ import annotations
 
+import copy
 import weakref
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
@@ -1141,7 +1142,7 @@ def transition(
     _require_live(state, "transition")
     t0 = _time.time() if phase_sink is not None else 0.0
     cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
+    theta, rng = _next_theta(state)
 
     # steady state keeps the chain in block format (O(p) grouped rows per
     # kernel); entry from init/load/assign feeds cluster rows once
@@ -1183,6 +1184,7 @@ def transition(
         block_df=new_df if is_block else None,
         local_parts=None,
         theta=theta,
+        rng=rng,
         summary=summary,
         current_seed=state.current_seed + state.num_partitions,
     )
@@ -1215,7 +1217,7 @@ def transition_fused(
     if n_sweeps < 1:
         raise ValueError("n_sweeps must be >= 1")
     cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
+    theta, rng = _next_theta(state)
     if local:
         ps = state.local_parts[0] if state.local_parts else None
         if ps is None:
@@ -1269,6 +1271,7 @@ def transition_fused(
             block_df=None,
             local_parts={0: ps},
             theta=theta,
+            rng=rng,
             summary=summary,
             current_seed=state.current_seed + n_sweeps,
         )
@@ -1298,6 +1301,7 @@ def transition_fused(
             block_df=new_df if is_block else None,
             local_parts=None,
             theta=theta,
+            rng=rng,
             summary=summary,
             current_seed=state.current_seed + n_sweeps * state.num_partitions,
         )
@@ -1376,7 +1380,7 @@ def transition_multisweep(
         raise ValueError("n_sweeps must be >= 1")
     t0 = _time.time() if phase_sink is not None else 0.0
     cache = state.cache
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
+    theta, rng = _next_theta(state)
     src = state.block_df if state.block_df is not None else state.df
     p = state.num_partitions
     df_in, keys = _salted_group(src, p, num_buckets=p)
@@ -1403,6 +1407,7 @@ def transition_multisweep(
         block_df=new_df if is_block else None,
         local_parts=None,
         theta=theta,
+        rng=rng,
         summary=summary,
         current_seed=state.current_seed + n_sweeps * p,
     )
@@ -1463,7 +1468,7 @@ def transition_local(state: State, mode: str) -> State:
     _require_live(state, "transition_local")
     cache = state.cache
     num_attrs = cache.num_attributes
-    theta = draw_theta(state.rng, cache, state.summary.agg_distortions)
+    theta, rng = _next_theta(state)
     parts = state.local_parts
     if parts is None:
         parts = _df_to_local_parts(state.df, num_attrs)
@@ -1520,6 +1525,7 @@ def transition_local(state: State, mode: str) -> State:
         block_df=None,
         local_parts=migrated,
         theta=theta,
+        rng=rng,
         summary=summary,
         current_seed=state.current_seed + P,
     )
@@ -1719,6 +1725,15 @@ def assign_partitions(
         ),
     )
     return new_state
+
+
+def _next_theta(state: State) -> tuple[np.ndarray, np.random.Generator]:
+    """θ for the transition out of ``state``, drawn from a copy of its driver
+    RNG. The input state's RNG stays where it was, so a state is a value:
+    every chain sampled from it sees the same θ stream. The advanced copy
+    belongs to the successor state."""
+    rng = copy.deepcopy(state.rng)
+    return draw_theta(rng, state.cache, state.summary.agg_distortions), rng
 
 
 def draw_theta(
