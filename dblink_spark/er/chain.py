@@ -6,13 +6,16 @@ rec_ids array<string> (one row per non-isolated cluster per sample).
 Every operator here is the DataFrame re-expression of an RDD aggregation in
 the reference (citations inline); the cluster identity key is the *sorted*
 member array, which is deterministic where the reference relied on Set
-equality.
+equality. The sMPC path is aggregations only: a record's most probable
+cluster is a ``min_by`` over its clusters' counts, not a window sort, and
+the sample count is a lazy scalar subquery, so writing the sMPC runs one
+job per shuffle and no eager count.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 def most_probable_clusters(chain: DataFrame) -> DataFrame:
@@ -20,24 +23,28 @@ def most_probable_clusters(chain: DataFrame) -> DataFrame:
     (ref: LinkageChain.scala:52-64, G1).
 
     Returns: rec_id string, cluster array<string> (sorted), freq double.
-    Ties break deterministically on the smaller cluster key.
+    Ties break deterministically on the smaller string-cast cluster key.
+    ``freq`` divides by the number of samples through a scalar subquery, so
+    a plan that does not read ``freq`` (the sMPC) never counts them.
     """
-    num_samples = chain.select("iteration").distinct().count()
-    freqs = (
+    n_samples = chain.select(F.count_distinct("iteration")).scalar()
+    counts = (
         chain.select(F.sort_array("rec_ids").alias("cluster"))
         .groupBy("cluster")
-        .agg((F.count("*") / F.lit(num_samples)).alias("freq"))
+        .agg(F.count("*").alias("n"))
     )
-    per_record = freqs.select(
-        F.explode("cluster").alias("rec_id"), "cluster", "freq"
+    best = (
+        counts.select(F.explode("cluster").alias("rec_id"), "cluster", "n")
+        .groupBy("rec_id")
+        .agg(
+            F.min_by(
+                F.struct("cluster", "n"),
+                F.struct(-F.col("n"), F.col("cluster").cast("string")),
+            ).alias("best")
+        )
     )
-    w = Window.partitionBy("rec_id").orderBy(
-        F.desc("freq"), F.asc(F.col("cluster").cast("string"))
-    )
-    return (
-        per_record.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("rec_id", "cluster", "freq")
+    return best.select(
+        "rec_id", "best.cluster", (F.col("best.n") / n_samples).alias("freq")
     )
 
 

@@ -33,7 +33,7 @@ from dblink_spark.er.chain import (
     shared_most_probable_clusters,
 )
 from dblink_spark.er.analysis import membership_to_clusters
-from dblink_spark.er.metrics import evaluate_clustering, evaluate_pairwise
+from dblink_spark.er.metrics import PairwiseMetrics, contingency_table
 from dblink_spark.er.partition import KDTreePartitioner, PartitionFunction, SinglePartition
 from dblink_spark.er.sampler import SamplerOptions, sample
 from dblink_spark.er.state import assign_partitions, init_state
@@ -299,15 +299,18 @@ class Project:
         truth = self.true_clusters()
         out: dict[str, Any] = {}
         metrics = params.get("metrics", ["pairwise", "cluster"])
+        if "pairwise" in metrics or "cluster" in metrics:
+            # one contingency table serves both metrics
+            table = contingency_table(smpc, truth)
         if "pairwise" in metrics:
-            m = evaluate_pairwise(smpc, truth)
+            m = PairwiseMetrics(table.confusion())
             out["pairwise"] = {
                 "precision": m.precision,
                 "recall": m.recall,
                 "f1": m.f1,
             }
         if "cluster" in metrics:
-            out["cluster"] = {"adjusted_rand_index": evaluate_clustering(smpc, truth)}
+            out["cluster"] = {"adjusted_rand_index": table.adjusted_rand_index()}
         with open(os.path.join(self.output_path, "evaluation-results.txt"), "w") as f:
             for fam, vals in out.items():
                 for k, v in vals.items():

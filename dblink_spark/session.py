@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory that holds the ``dblink_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "dblink_spark",
@@ -31,6 +34,10 @@ def get_spark(
       pandas-UDF kernel (the MCMC transition, embeddings ops).
     - ``spark.sql.shuffle.partitions``: sized to cores locally; on a real
       cluster this should be ~2-3x total executor cores (AQE coalesces).
+    - ``spark.executorEnv.PYTHONPATH``: the directory that holds this
+      package, appended to any value ``extra_conf`` gives, so Python
+      workers can unpickle kernels that reference the library even when
+      the driver found it through ``sys.path`` alone.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -51,7 +58,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (conf.get(key), _PACKAGE_ROOT) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -8,7 +8,8 @@ min/max stats on ``iteration`` let the scan skip whole files for the
 burn-in cutoff filter (ref: Project.scala:111-112) without paying the
 small-files/partition-explosion cost of ``partitionBy("iteration")``.
 
-Scan (ref: LinkageChain.scala:35-43): plain parquet read; the cutoff is a
+Scan (ref: LinkageChain.scala:35-43): plain parquet read with the chain's
+fixed schema, so no Spark job reads footers to infer it; the cutoff is a
 pushed filter (shows under PushedFilters in explain()).
 """
 
@@ -24,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 CHAIN_DIRNAME = "linkage-chain.parquet"
+#: the columns both writers produce (see er/sampler.py)
+CHAIN_SCHEMA = "iteration long, partition_id int, rec_ids array<string>"
 
 
 class BufferedChainWriter:
@@ -100,7 +103,7 @@ def read_linkage_chain(
     """Scan saved samples; ``cutoff`` filters ``iteration >= cutoff`` and is
     pushed down to the parquet scan (ref: Project.scala:104-116)."""
     p = path if path.endswith(".parquet") else os.path.join(path, CHAIN_DIRNAME)
-    df = spark.read.parquet(p)
+    df = spark.read.schema(CHAIN_SCHEMA).parquet(p)
     if cutoff is not None:
         df = df.filter(F.col("iteration") >= cutoff)
     return df

@@ -20,6 +20,24 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: the number of Spark jobs ``fn()`` runs, read from
+    the status tracker under a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"test-jobs-{id(fn)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE

@@ -84,6 +84,114 @@ class TestPairwise:
         assert m.f1 == pytest.approx(1 / 3)
 
 
+def _pair_join_confusion(predicted_clusters, true_clusters):
+    """Oracle: the pair join that evaluate_pairwise replaced. Every
+    within-cluster pair of each side, full-outer-joined on the canonical
+    pair (ref: PairwiseMetrics.scala:44-52 + BinaryConfusionMatrix.scala:45-70).
+    Returns (tp, fp, fn)."""
+    from dblink_spark.er.analysis import clusters_to_pairwise_links
+
+    p = clusters_to_pairwise_links(predicted_clusters).select(
+        "rec1", "rec2", F.lit(True).alias("__pred")
+    )
+    t = clusters_to_pairwise_links(true_clusters).select(
+        "rec1", "rec2", F.lit(True).alias("__true")
+    )
+    row = (
+        p.join(t, ["rec1", "rec2"], "full_outer")
+        .agg(
+            F.sum(F.when(F.col("__pred") & F.col("__true"), 1).otherwise(0)).alias("tp"),
+            F.sum(F.when(F.col("__pred") & F.col("__true").isNull(), 1).otherwise(0)).alias("fp"),
+            F.sum(F.when(F.col("__pred").isNull() & F.col("__true"), 1).otherwise(0)).alias("fn"),
+        )
+        .collect()[0]
+    )
+    return (row["tp"] or 0, row["fp"] or 0, row["fn"] or 0)
+
+
+def _random_clusterings(seed, n=300):
+    """Two random clusterings of overlapping record sets: about 5% of the
+    records appear only in the prediction and 5% only in the truth."""
+    import random
+
+    rng = random.Random(seed)
+    ids = [f"r{i}" for i in range(n)]
+
+    def clustering(keep):
+        sets, cur = [], []
+        for r in rng.sample(keep, len(keep)):
+            cur.append(r)
+            if rng.random() < 0.45:
+                sets.append(set(cur))
+                cur = []
+        return sets + ([set(cur)] if cur else [])
+
+    pred_ids = [r for r in ids if rng.random() > 0.05]
+    true_ids = [r for r in ids if r not in pred_ids or rng.random() > 0.05]
+    return clustering(pred_ids), clustering(true_ids)
+
+
+PARITY_CASES = {
+    "golden": ([{"a", "b", "c"}, {"d", "e"}], [{"a", "b"}, {"c", "d"}, {"e"}]),
+    "prediction_only_records": (
+        [{"a", "b", "c"}, {"x", "y"}, {"z"}],
+        [{"a", "b"}, {"c"}],
+    ),
+    "truth_only_records": (
+        [{"a", "b"}, {"c"}],
+        [{"a", "b", "c"}, {"x", "y"}, {"z"}],
+    ),
+    "both_sides_missing": ([{"a", "b", "x"}, {"c"}], [{"a", "b", "y"}, {"c", "z"}]),
+    "all_singletons": ([{"a"}, {"b"}, {"c"}, {"d"}], [{"a", "b"}, {"c", "d"}]),
+    "one_cluster": ([{"a", "b", "c", "d", "e"}], [{"a", "b"}, {"c"}, {"d", "e"}]),
+    "empty": ([], []),
+    "random": _random_clusterings(7),
+}
+
+
+class TestPairwiseParity:
+    """evaluate_pairwise counts pairs from one contingency table; the pair
+    join above is its oracle, integer for integer."""
+
+    @pytest.mark.parametrize("case", sorted(PARITY_CASES))
+    def test_matches_pair_join(self, spark, case):
+        from dblink_spark.er.metrics import evaluate_pairwise
+
+        pred_sets, true_sets = PARITY_CASES[case]
+        pred, truth = _clusters(spark, pred_sets), _clusters(spark, true_sets)
+        c = evaluate_pairwise(pred, truth).confusion
+        assert (c.tp, c.fp, c.fn) == _pair_join_confusion(pred, truth)
+
+    def test_all_singletons_precision_nan(self, spark):
+        from dblink_spark.er.metrics import evaluate_pairwise
+
+        pred_sets, true_sets = PARITY_CASES["all_singletons"]
+        m = evaluate_pairwise(_clusters(spark, pred_sets), _clusters(spark, true_sets))
+        assert (m.confusion.tp, m.confusion.fp, m.confusion.fn) == (0, 0, 2)
+        assert math.isnan(m.precision)
+        assert m.recall == 0.0
+
+    @pytest.mark.parametrize(
+        "pred,truth",
+        [
+            ([["a", "b"], ["b", "c"]], [["a"], ["b"], ["c"]]),
+            ([["a"], ["b"], ["c"]], [["a", "b", "c"], ["c"]]),
+            ([["a", "a"], ["b"]], [["a", "b"]]),
+        ],
+        ids=["prediction", "truth", "within_cluster"],
+    )
+    def test_repeated_rec_id_raises(self, spark, pred, truth):
+        from dblink_spark.er.metrics import evaluate_clustering, evaluate_pairwise
+
+        schema = "cluster: array<string>"
+        p = spark.createDataFrame([(c,) for c in pred], schema)
+        t = spark.createDataFrame([(c,) for c in truth], schema)
+        with pytest.raises(ValueError, match="partition"):
+            evaluate_pairwise(p, t)
+        with pytest.raises(ValueError, match="partition"):
+            evaluate_clustering(p, t)
+
+
 class TestARI:
     def test_perfect_agreement(self, spark):
         from dblink_spark.er.metrics import evaluate_clustering
@@ -184,6 +292,38 @@ class TestChainAnalysis:
         assert sorted(mpc["a"]["cluster"]) == ["a", "b"]
         assert mpc["a"]["freq"] == pytest.approx(2 / 3)
         assert mpc["d"]["freq"] == pytest.approx(1.0)
+
+    def test_most_probable_clusters_tie_break(self, spark):
+        """Equal frequencies: the smaller string-cast cluster key wins. In
+        string order "[a, b, c]" sorts before "[a, b]" (',' < ']'), the
+        reverse of array order, so this pins the cast."""
+        from dblink_spark.er.chain import (
+            most_probable_clusters,
+            shared_most_probable_clusters,
+        )
+
+        rows = [
+            (1, 0, ["a", "b"]), (1, 0, ["c"]), (1, 0, ["d", "e"]), (1, 0, ["f"]),
+            (2, 0, ["a", "b", "c"]), (2, 0, ["d", "f"]), (2, 0, ["e"]),
+        ]
+        chain = spark.createDataFrame(
+            rows, "iteration: long, partition_id: int, rec_ids: array<string>"
+        )
+        mpc = {r["rec_id"]: r for r in most_probable_clusters(chain).collect()}
+        assert {k: list(r["cluster"]) for k, r in mpc.items()} == {
+            "a": ["a", "b", "c"],
+            "b": ["a", "b", "c"],
+            "c": ["a", "b", "c"],
+            "d": ["d", "e"],
+            "e": ["d", "e"],
+            "f": ["d", "f"],
+        }
+        assert {r["freq"] for r in mpc.values()} == {0.5}
+        smpc = {
+            tuple(r["cluster"])
+            for r in shared_most_probable_clusters(most_probable_clusters(chain)).collect()
+        }
+        assert smpc == {("a", "b", "c"), ("d", "e"), ("f",)}
 
     def test_shared_most_probable_clusters(self, spark, chain):
         from dblink_spark.er.chain import (

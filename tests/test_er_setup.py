@@ -63,17 +63,6 @@ def clusterings(spark, two_files):
     return spark.createDataFrame(pred, schema), spark.createDataFrame(true, schema)
 
 
-def _count_jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"test-er-setup-{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _state_hashes(state) -> tuple[str, str]:
     """(hash of the cluster rows in a canonical order, hash of the summary,
     θ, seed and driver RNG)."""
@@ -104,11 +93,12 @@ def _state_hashes(state) -> tuple[str, str]:
     return rows_h.hexdigest()[:16], summary_h.hexdigest()[:16]
 
 
-def test_setup_phase_job_counts(spark, two_files, clusterings):
+def test_setup_phase_job_counts(spark, count_jobs, two_files, clusterings):
     """Warm job counts: the cache is one stacked aggregation plus one
     neighbor-pair job for all attributes, init one checking aggregation,
     one checkpoint and one collect of partial counts, and the ARI one
-    collect of the contingency table."""
+    shuffle of both memberships by rec_id and one collect of the
+    records' cluster ids."""
     records, attrs, cache, _ = two_files
     pred, true = clusterings
     phases = {
@@ -120,11 +110,11 @@ def test_setup_phase_job_counts(spark, two_files, clusterings):
     }
     for fn in phases.values():
         fn()  # warm-up
-    counts = {name: _count_jobs(spark, fn) for name, fn in phases.items()}
+    counts = {name: count_jobs(fn) for name, fn in phases.items()}
     assert counts == {
         "build_records_cache": 5,
         "init_state": 5,
-        "evaluate_clustering": 5,
+        "evaluate_clustering": 2,
     }
 
 
