@@ -387,22 +387,6 @@ def main() -> None:
     except Exception as e:  # never let the ER probe break the contract line
         print(f"# er bench skipped: {e}", file=sys.stderr)
     try:
-        out.update(rl10k_partition_scaling(spark))
-    except Exception as e:
-        print(f"# rl10k bench skipped: {e}", file=sys.stderr)
-    try:
-        out.update(rl10k_linkage_quality(spark))
-    except Exception as e:
-        print(f"# rl10k quality probe skipped: {e}", file=sys.stderr)
-    try:
-        out.update(rl10k_multisweep_quality(spark))
-    except Exception as e:
-        print(f"# rl10k multisweep quality probe skipped: {e}", file=sys.stderr)
-    try:
-        out.update(rl500_linkage_quality(spark))
-    except Exception as e:
-        print(f"# rl500 quality probe skipped: {e}", file=sys.stderr)
-    try:
         out.update(paper_scale_spark_path(spark))
     except Exception as e:
         print(f"# paper-scale bench skipped: {e}", file=sys.stderr)
@@ -562,41 +546,6 @@ def _compact(out: dict, timings: dict[str, float]) -> dict:
         "er_mcmc_probe_iters",
         "er_mcmc_probe_stat",
         "er_mcmc_spread",
-        "er_rl10k_f1",
-        "er_rl10k_ari",
-        "er_rl10k_multisweep_f1",
-        "er_rl10k_multisweep_ari",
-        # r15: the RECOMMENDED config's kept-sample quality, pinned per
-        # round alongside the pessimal full-chain k=8 pin (VERDICT r14
-        # task 2 — the number users act on is now the number re-measured)
-        "er_rl10k_burninfused_f1",
-        "er_rl10k_burninfused_ari",
-        # r16: the reference's OTHER flagship example pinned at full
-        # length per round (VERDICT r15 task 6), like rl10k's pin
-        "er_rl500_f1",
-        "er_rl500_ari",
-        "er_rl10k_1part_iters_per_sec",
-        "er_rl10k_2part_iters_per_sec",
-        # the two fused-path spreads named by VERDICT r9 "wrong" #2: their
-        # point estimates overlap across rounds (1.65x apparent deltas are
-        # noise) and the committed artifact must show that on its own
-        "er_rl10k_1part_spread",
-        "er_rl10k_2part_spread",
-        "er_rl10k_spark_1part_iters_per_sec",
-        "er_rl10k_spark_2part_iters_per_sec",
-        "er_rl10k_spark_4part_iters_per_sec",
-        # spreads ride along with the medians (VERDICT r9 task 6: the
-        # committed compact artifact must make partition-scaling noise
-        # adjudicable on its own — a bare median with 2x host drift isn't)
-        "er_rl10k_spark_1part_spread",
-        "er_rl10k_spark_4part_spread",
-        # r14: multi-partition sweep fusion — it/s must scale with k as
-        # the ~0.157s/iter plan+job floor amortizes (VERDICT r13 task 3)
-        "er_rl10k_multisweep4p_k1_iters_per_sec",
-        "er_rl10k_multisweep4p_k2_iters_per_sec",
-        "er_rl10k_multisweep4p_k4_iters_per_sec",
-        "er_rl10k_multisweep4p_k8_iters_per_sec",
-        "er_rl10k_multisweep4p_k8_spread",
         "er_paper_spark_1part_iters_per_sec",
         "er_paper_spark_4part_iters_per_sec",
         "er_paper_spark_8part_iters_per_sec",
@@ -651,15 +600,9 @@ def _compact(out: dict, timings: dict[str, float]) -> dict:
         "er_1m_16part_max_partition_clusters",
         "er_1m_32part_max_partition_clusters",
         "er_1m_8part_max_partition_clusters",
-        # r16 additions drop early: the ARI equals its F1 twin on every
-        # deterministic chain so far, and the 16p fusion point is the
-        # secondary arm of the paper-scale probe (8p is the headline)
-        "er_rl500_ari",
+        # the 16p fusion point is the secondary arm of the paper-scale
+        # probe (8p is the headline)
         "er_paper_multisweep16p_k8_speedup_vs_k1",
-        "er_rl10k_multisweep_ari",
-        "er_rl10k_burninfused_ari",
-        "er_rl10k_multisweep4p_k2_iters_per_sec",
-        "er_rl10k_multisweep4p_k4_iters_per_sec",
         "er_1m_multisweep8p_k4_speedup_vs_k1",
         "er_1m_multisweep8p_k8_sec_per_iter",
         # r17: the streaming probe's trend lives in the full payload; its
@@ -678,20 +621,10 @@ def _compact(out: dict, timings: dict[str, float]) -> dict:
         "er_mcmc_spread",
         "er_paper_spark_1part_spread",
         "er_paper_spark_16part_spread",
-        "er_rl10k_spark_1part_spread",
         "er_paper_spark_1part_iters_per_sec",
         "er_paper_spark_8part_iters_per_sec",
-        # a point estimate and its spread drop TOGETHER (a bare median
-        # with no spread is exactly the misreading this payload fixes)
-        "er_rl10k_2part_spread",
-        "er_rl10k_2part_iters_per_sec",
-        "er_rl10k_1part_spread",
-        "er_rl10k_1part_iters_per_sec",
-        "er_rl10k_spark_2part_iters_per_sec",
-        "er_rl10k_spark_1part_iters_per_sec",
-        # the 4-part spreads drop LAST among probe extras: they adjudicate
-        # the headline scaling endpoints
-        "er_rl10k_spark_4part_spread",
+        # the 4-part spread drops LAST among probe extras: it adjudicates
+        # the headline scaling endpoint
         "er_paper_spark_4part_spread",
     ]
     while len(json.dumps(compact)) > COMPACT_LINE_BUDGET and droppable:
@@ -981,16 +914,12 @@ def paper_scale_multisweep(spark, n_records: int = 100_000) -> dict:
     recommendation down to 100k or bound it.
 
     Methodology matches the 1M artifact (er-perf r15): every point runs
-    through ``transition_multisweep`` (k=1 = same call path), and the two
+    through ``transition(n_sweeps=k)`` (k=1 = same call path), and the two
     k values are INTERLEAVED round-robin over 3 cycles with the median per
     k — a sequential per-k pass conflates the chain's fresh→equilibrium
     drift with the k effect. 16 sweeps per reading."""
     from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import (
-        assign_partitions,
-        init_state,
-        transition_multisweep,
-    )
+    from dblink_spark.er.state import assign_partitions, init_state, transition
 
     records, attrs, cache = _make_er_problem(spark, n_records, seed=11)
     s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=99)
@@ -1001,14 +930,14 @@ def paper_scale_multisweep(spark, n_records: int = 100_000) -> dict:
         )
         pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
         s = assign_partitions(s0, pf, p)
-        s = transition_multisweep(s, "PCG-I", 1)  # warm this p
+        s = transition(s, "PCG-I")  # warm this p
         readings: dict[int, list[float]] = {1: [], 8: []}
         for _cyc in range(3):
             for k in (1, 8):
                 jobs = 16 // k
                 t0 = time.time()
                 for _ in range(jobs):
-                    s = transition_multisweep(s, "PCG-I", k)
+                    s = transition(s, "PCG-I", n_sweeps=k)
                 readings[k].append((k * jobs) / (time.time() - t0))
         k1 = statistics.median(readings[1])
         k8 = statistics.median(readings[8])
@@ -1314,16 +1243,15 @@ def er_1m_partition_scaling(spark, n_records: int = 1_000_000, n_iters: int = 6)
             # baseline shares the methodology), 8 sweeps per point,
             # within-session ratios are the signal (absolutes are host
             # weather; the per-point canary brackets them). The
-            # quality cost at this scale is measured out-of-band by
-            # tools/measure_1m_multisweep.py (equal-sweep-count k=1 vs
-            # k=8 chains) — too long for a per-round probe. The k points
+            # quality cost at this scale was measured out-of-band
+            # (equal-sweep-count k=1 vs k=8 chains, recorded in
+            # BENCH_1M_MULTISWEEP_r15.json) — too long for a per-round
+            # probe. The k points
             # INTERLEAVE in two round-robin cycles and each k reports
             # the median of its readings: a sequential one-shot-per-k
             # sweep conflates the chain's own state drift (fresh chains
             # sweep faster than mixed ones — the adjudicated
             # equilibrium-transient effect) with the k effect.
-            from dblink_spark.er.state import transition_multisweep
-
             ms = s  # reuse the warmed p=8 chain state
             readings: dict[int, list[float]] = {k: [] for k in (1, 2, 4, 8)}
             for _cyc in range(2):
@@ -1331,7 +1259,7 @@ def er_1m_partition_scaling(spark, n_records: int = 1_000_000, n_iters: int = 6)
                     jobs = max(8 // k, 1)
                     t0 = time.time()
                     for _ in range(jobs):
-                        ms = transition_multisweep(ms, "PCG-I", k)
+                        ms = transition(ms, "PCG-I", n_sweeps=k)
                     readings[k].append((time.time() - t0) / (k * jobs))
             k1_spi = statistics.median(readings[1])
             for k in (1, 2, 4, 8):
@@ -1363,284 +1291,6 @@ def er_1m_partition_scaling(spark, n_records: int = 1_000_000, n_iters: int = 6)
                 "dominates (see BENCH_1M_MULTISWEEP_r16.json); the "
                 "adjudicated claim lives in COVERAGE.md"
             )
-    return out
-
-
-def rl10k_partition_scaling(spark, n_iters: int = 20) -> dict:
-    """Throughput on the reference's flagship RLdata10000 workload
-    (examples/RLdata10000.conf: PCG-I, KD-tree numLevels=1 on fname_c1),
-    on BOTH execution paths:
-
-    - driver-local kernels (what the sampler picks for <=2M-record chains):
-      1 partition fused vs the configured 2 partitions;
-    - the distributed Spark ``applyInPandas`` path at 1/2/4 partitions —
-      the partition-scaling axis the dblink paper headlines (BASELINE.md).
-      Forced via ``transition()`` directly (equivalent to
-      ``SamplerOptions(local_exec_max_records=0)``).
-
-    All points are the MEDIAN of 3 independent windows (r7 variance fix).
-
-    Expected shape at THIS problem size: the Spark path speeds up 1→2
-    partitions (parallel kernel tasks) then plateaus, because the
-    per-iteration fixed cost (job scheduling + Arrow shuffle of the state +
-    lazy-checkpoint materialization + summary job, ~0.5s on local[32])
-    dominates once the ~50ms/partition kernels shrink below it. That floor
-    is why the sampler routes driver-sized problems local; the distributed
-    path pays off when per-partition kernel time >> job floor (see
-    `paper_scale_spark_path`)."""
-    conf = "/root/reference/examples/RLdata10000.conf"
-    csv_path = "/root/reference/examples/RLdata10000.csv"
-    if not (os.path.exists(conf) and os.path.exists(csv_path)):
-        return {}
-    import tempfile
-
-    from dblink_spark.config import load_config
-    from dblink_spark.er.cache import build_records_cache
-    from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import (
-        assign_partitions,
-        init_state,
-        transition,
-        transition_fused,
-        transition_local,
-    )
-    from dblink_spark.project import Project
-
-    cfg = load_config(conf)
-    d = cfg["dblink"]
-    d["data"]["path"] = csv_path
-    tmp = tempfile.mkdtemp(prefix="bench_rl10k_")
-    d["outputPath"] = tmp + "/"
-    d["checkpointPath"] = tmp + "/ckpt"
-    project = Project.from_config(spark, cfg)
-    records = project.records().select("rec_id", "file_id", *project.attr_names)
-    cache = build_records_cache(
-        records, project.matching_attrs, project.expected_max_cluster_size
-    )
-    s0 = init_state(
-        spark, records, cache, SinglePartition(), 1, seed=project.random_seed,
-        population_size=project.population_size,
-    )
-    out = {}
-
-    s1 = transition_fused(s0, "PCG-I", 2)  # warm
-    state_box = [s1]
-
-    def _fused_window() -> float:
-        t0 = time.time()
-        state_box[0] = transition_fused(state_box[0], "PCG-I", n_iters)
-        return n_iters / (time.time() - t0)
-
-    med, spread, _ = _median_windows(_fused_window)
-    out["er_rl10k_1part_iters_per_sec"] = med
-    out["er_rl10k_1part_spread"] = spread
-
-    part = project.build_partitioner()
-    part.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-    s2 = assign_partitions(s0, part, part.num_partitions)
-    s2 = transition_local(s2, "PCG-I")  # warm (collects df -> local parts)
-    local_box = [s2]
-
-    def _local_window() -> float:
-        t0 = time.time()
-        for _ in range(n_iters):
-            local_box[0] = transition_local(local_box[0], "PCG-I")
-        return n_iters / (time.time() - t0)
-
-    med2, spread2, _ = _median_windows(_local_window)
-    out["er_rl10k_2part_iters_per_sec"] = med2
-    out["er_rl10k_2part_spread"] = spread2
-    print(
-        f"# er_rl10k: {med:.1f} it/s 1-part ({spread}), {med2:.1f} it/s "
-        f"{part.num_partitions}-part ({spread2}) [driver-local kernels, "
-        f"median of 3]", file=sys.stderr,
-    )
-
-    # Distributed applyInPandas path, 1/2/4 partitions (10 timed iterations
-    # per window — the per-iteration cost is ~10x the driver-local path).
-    kd_order = [
-        project.attr_names.index(a)
-        for a in (
-            project.partitioner_cfg.get("parameters", {}).get(
-                "matchingAttributes"
-            )
-            or project.attr_names
-        )
-    ]
-    spark_iters = max(n_iters // 2, 1)
-    for p in (1, 2, 4):
-        if p == 1:
-            pf = SinglePartition()
-        else:
-            pf = KDTreePartitioner(
-                num_levels=p.bit_length() - 1, attribute_ids=kd_order
-            )
-            pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-        s = assign_partitions(s0, pf, pf.num_partitions)
-        s = transition(s, "PCG-I")  # warm
-        box = [s]
-
-        def _spark_window() -> float:
-            t0 = time.time()
-            for _ in range(spark_iters):
-                box[0] = transition(box[0], "PCG-I")
-            return spark_iters / (time.time() - t0)
-
-        medp, spreadp, _ = _median_windows(_spark_window)
-        out[f"er_rl10k_spark_{p}part_iters_per_sec"] = medp
-        out[f"er_rl10k_spark_{p}part_spread"] = spreadp
-        print(
-            f"# er_rl10k_spark: {medp:.2f} it/s at {p} partition(s) "
-            f"(median of 3 windows, {spreadp})", file=sys.stderr,
-        )
-
-    # r14 (VERDICT r13 task 3): multi-partition sweep fusion at p=4 —
-    # transition_multisweep runs k kernel sweeps per Spark job, amortizing
-    # the measured ~0.157s/iter plan+job floor k× (the floor, not the
-    # kernels, dominates rl10k at p=4). k=1 is bit-parity with
-    # transition() (pinned in tests/test_er_mcmc.py); k>1 relaxes
-    # migration/θ to a k-sweep cadence (documented chain-semantics
-    # difference). Every window times ~16 sweeps so the k points compare
-    # like for like.
-    from dblink_spark.er.state import transition_multisweep
-
-    pf4 = KDTreePartitioner(num_levels=2, attribute_ids=kd_order)
-    pf4.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-    for k in (1, 2, 4, 8):
-        s = assign_partitions(s0, pf4, pf4.num_partitions)
-        s = transition_multisweep(s, "PCG-I", k)  # warm
-        box = [s]
-        jobs = max(16 // k, 1)
-
-        def _ms_window() -> float:
-            t0 = time.time()
-            for _ in range(jobs):
-                box[0] = transition_multisweep(box[0], "PCG-I", k)
-            return (k * jobs) / (time.time() - t0)
-
-        medk, spreadk, _ = _median_windows(_ms_window)
-        out[f"er_rl10k_multisweep4p_k{k}_iters_per_sec"] = medk
-        out[f"er_rl10k_multisweep4p_k{k}_spread"] = spreadk
-        print(
-            f"# er_rl10k_multisweep: k={k} -> {medk:.2f} it/s at 4 "
-            f"partitions (median of 3 windows, {spreadk})", file=sys.stderr,
-        )
-    return out
-
-
-def rl10k_linkage_quality(spark) -> dict:
-    """Model-QUALITY probe (VERDICT r8 task 7): pairwise F1 and adjusted
-    Rand index on the reference's flagship RLdata10000 workload, recorded
-    in the payload so linkage-quality drift is tracked round-over-round
-    like perf — previously these lived only as pytest thresholds
-    (tests/test_rldata10k_parity.py pins >0.70/>0.70; the full-length
-    measured point is F1=0.764 / ARI=0.764).
-
-    Runs the reference config END TO END (1,000 iterations, sMPC cutoff
-    100 — identical to the parity test, ~15s fused on an idle host). The
-    chain is fully seeded and deterministic, so these numbers are EXACT
-    round-over-round unless sampler/kernel semantics changed — any delta
-    at all is a semantic diff to explain, not timing noise
-    (er_rl10k_quality_chain records the methodology for bench_diff
-    comparability)."""
-    conf = "/root/reference/examples/RLdata10000.conf"
-    csv_path = "/root/reference/examples/RLdata10000.csv"
-    if not (os.path.exists(conf) and os.path.exists(csv_path)):
-        return {}
-    import tempfile
-
-    from dblink_spark.config import load_config
-    from dblink_spark.project import Project
-
-    cfg = load_config(conf)
-    d = cfg["dblink"]
-    d["data"]["path"] = csv_path
-    tmp = tempfile.mkdtemp(prefix="bench_rl10k_quality_")
-    d["outputPath"] = tmp + "/"
-    d["checkpointPath"] = tmp + "/ckpt"
-    res = Project.from_config(spark, cfg).run()
-    pw = res["evaluate"]["pairwise"]
-    # methodology marker DERIVED from the loaded config (ADVICE r9: a
-    # hardcoded literal would falsely claim chain comparability if the
-    # external conf's iterations/cutoff/seed ever differ from the literal)
-    steps = {s["name"]: s.get("parameters", {}) for s in d["steps"]}
-    n_iters = steps["sample"]["sampleSize"] * max(
-        int(steps["sample"].get("thinningInterval", 1)), 1
-    ) + int(steps["sample"].get("burninInterval", 0))
-    marker = (
-        f"{n_iters}it-smpc{steps['evaluate']['lowerIterationCutoff']}"
-        f"-seed{d['randomSeed']}"
-    )
-    out = {
-        "er_rl10k_f1": round(pw["f1"], 4),
-        "er_rl10k_precision": round(pw["precision"], 4),
-        "er_rl10k_recall": round(pw["recall"], 4),
-        "er_rl10k_ari": round(
-            res["evaluate"]["cluster"]["adjusted_rand_index"], 4
-        ),
-        "er_rl10k_quality_chain": marker,
-    }
-    print(
-        f"# er_rl10k quality: F1 {out['er_rl10k_f1']:.3f} "
-        f"(P {out['er_rl10k_precision']:.3f} R {out['er_rl10k_recall']:.3f}) "
-        f"ARI {out['er_rl10k_ari']:.3f} [deterministic seeded chain]",
-        file=sys.stderr,
-    )
-    return out
-
-
-def rl500_linkage_quality(spark) -> dict:
-    """RLdata500 quality pin at the reference's FULL configured length
-    (VERDICT r15 task 6): the reference's other flagship example
-    (examples/RLdata500.conf — 1,000 iterations, thinning 10, sMPC
-    cutoff 100, seed 319158) run end-to-end per round with exact P/R/F1/
-    ARI recorded in the payload, exactly like rl10k's pin. The parity
-    test (tests/test_rldata_parity.py) asserts >-thresholds at this
-    length; this pin records the exact seeded-chain values so any
-    kernel-semantics drift shows as a bit-level delta round-over-round.
-    The chain is driver-local (500 records) — cost is seconds."""
-    conf = "/root/reference/examples/RLdata500.conf"
-    csv_path = "/root/reference/examples/RLdata500.csv"
-    if not (os.path.exists(conf) and os.path.exists(csv_path)):
-        return {}
-    import tempfile
-
-    from dblink_spark.config import load_config
-    from dblink_spark.project import Project
-
-    cfg = load_config(conf)
-    d = cfg["dblink"]
-    d["data"]["path"] = csv_path
-    tmp = tempfile.mkdtemp(prefix="bench_rl500_quality_")
-    d["outputPath"] = tmp + "/"
-    d["checkpointPath"] = tmp + "/ckpt"
-    t0 = time.time()
-    res = Project.from_config(spark, cfg).run()
-    dt = round(time.time() - t0, 1)
-    pw = res["evaluate"]["pairwise"]
-    steps = {s["name"]: s.get("parameters", {}) for s in d["steps"]}
-    n_iters = steps["sample"]["sampleSize"] * max(
-        int(steps["sample"].get("thinningInterval", 1)), 1
-    ) + int(steps["sample"].get("burninInterval", 0))
-    out = {
-        "er_rl500_f1": round(pw["f1"], 4),
-        "er_rl500_precision": round(pw["precision"], 4),
-        "er_rl500_recall": round(pw["recall"], 4),
-        "er_rl500_ari": round(
-            res["evaluate"]["cluster"]["adjusted_rand_index"], 4
-        ),
-        "er_rl500_quality_chain": (
-            f"{n_iters}it-smpc{steps['evaluate']['lowerIterationCutoff']}"
-            f"-seed{d['randomSeed']}"
-        ),
-        "er_rl500_run_sec": dt,
-    }
-    print(
-        f"# er_rl500 quality: F1 {out['er_rl500_f1']:.3f} "
-        f"(P {out['er_rl500_precision']:.3f} R {out['er_rl500_recall']:.3f}) "
-        f"ARI {out['er_rl500_ari']:.3f} ({dt}s full 1000-it chain)",
-        file=sys.stderr,
-    )
     return out
 
 
@@ -1734,97 +1384,6 @@ def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
     return out
 
 
-def rl10k_multisweep_quality(spark) -> dict:
-    """Model-quality check for the r14 multisweep relaxation: the SAME
-    reference RLdata10000 config, run end-to-end on the DISTRIBUTED
-    2-partition path with ``multisweepK=8`` (θ and migration on an
-    8-sweep cadence) — if the documented chain-semantics relaxation cost
-    linkage quality, it would show here as F1/ARI falling out of the
-    parity band (the unfused chain measures 0.764/0.764; the pytest
-    floor is 0.70/0.70). The chain is seeded but NOT comparable
-    bit-for-bit to the unfused one (different θ RNG cadence), so the
-    committed number is a quality band check, not a determinism pin.
-
-    r14 baseline readings (isolated): 0.725 at k=2, 0.713 at k=8, and a
-    2000-iteration k=8 chain lands 0.703 — the cadence relaxation costs
-    ~0.05 F1 at this scale and longer chains do not buy it back, which
-    is why the docstring recommends k>1 for throughput-bound phases and
-    k=1 for kept samples. This probe pins the k=8 point per round so
-    the trade-off cannot silently worsen.
-
-    r15 (VERDICT r14 task 2): the probe ALSO runs the RECOMMENDED
-    configuration per round — ``multisweepBurninK=8`` + k=1 kept samples
-    (burn-in fused for throughput, every kept sample at exact reference
-    cadence) — as ``er_rl10k_burninfused_f1/ari``. Until now that number
-    (0.772 isolated, r14) lived only in a docstring and a test comment
-    while the bench re-measured just the pessimal full-chain k=8 pin;
-    the config users are told to run is now the config the bench
-    re-measures."""
-    conf = "/root/reference/examples/RLdata10000.conf"
-    csv_path = "/root/reference/examples/RLdata10000.csv"
-    if not (os.path.exists(conf) and os.path.exists(csv_path)):
-        return {}
-    import tempfile
-
-    from dblink_spark.config import load_config
-    from dblink_spark.project import Project
-
-    def _run_chain(params: dict) -> tuple[dict, float]:
-        cfg = load_config(conf)
-        d = cfg["dblink"]
-        d["data"]["path"] = csv_path
-        tmp = tempfile.mkdtemp(prefix="bench_rl10k_ms_")
-        d["outputPath"] = tmp + "/"
-        d["checkpointPath"] = tmp + "/ckpt"
-        for s in d["steps"]:
-            if s.get("name") == "sample":
-                s.setdefault("parameters", {}).update(params)
-                s["parameters"]["localExecMaxRecords"] = 0  # force distributed
-        t0 = time.time()
-        res = Project.from_config(spark, cfg).run()
-        return res, round(time.time() - t0, 1)
-
-    res, dt = _run_chain({"multisweepK": 8})
-    pw = res["evaluate"]["pairwise"]
-    out = {
-        "er_rl10k_multisweep_f1": round(pw["f1"], 4),
-        "er_rl10k_multisweep_ari": round(
-            res["evaluate"]["cluster"]["adjusted_rand_index"], 4
-        ),
-        "er_rl10k_multisweep_chain": "1000it-k8-distributed-2part",
-        "er_rl10k_multisweep_run_sec": dt,
-    }
-    print(
-        f"# er_rl10k multisweep k=8 quality: F1 "
-        f"{out['er_rl10k_multisweep_f1']:.3f} ARI "
-        f"{out['er_rl10k_multisweep_ari']:.3f} "
-        f"({out['er_rl10k_multisweep_run_sec']}s end-to-end)",
-        file=sys.stderr,
-    )
-    res, dt = _run_chain({"multisweepBurninK": 8, "multisweepK": 1})
-    pw = res["evaluate"]["pairwise"]
-    out.update(
-        {
-            "er_rl10k_burninfused_f1": round(pw["f1"], 4),
-            "er_rl10k_burninfused_ari": round(
-                res["evaluate"]["cluster"]["adjusted_rand_index"], 4
-            ),
-            "er_rl10k_burninfused_chain": (
-                "1000it-burnink8-keptk1-distributed-2part"
-            ),
-            "er_rl10k_burninfused_run_sec": dt,
-        }
-    )
-    print(
-        f"# er_rl10k burn-in-fused (k=8 burnin, k=1 kept) quality: F1 "
-        f"{out['er_rl10k_burninfused_f1']:.3f} ARI "
-        f"{out['er_rl10k_burninfused_ari']:.3f} "
-        f"({out['er_rl10k_burninfused_run_sec']}s end-to-end)",
-        file=sys.stderr,
-    )
-    return out
-
-
 def mcmc_iters_per_sec(spark, n_records: int = 300, n_iters: int = 200):
     """ER-engine throughput probe (BASELINE.md planned metric): PCG-I
     transitions/sec on an RLdata-shaped synthetic, single partition.
@@ -1836,7 +1395,7 @@ def mcmc_iters_per_sec(spark, n_records: int = 300, n_iters: int = 200):
     jitter). r7: median of 3 windows + spread instead of best-of-2.
     Returns (median_rate, spread, window_rates)."""
     from dblink_spark.er.partition import SinglePartition
-    from dblink_spark.er.state import init_state, transition, transition_fused
+    from dblink_spark.er.state import init_state, transition, transition_local
 
     records, attrs, cache = _make_er_problem(spark, n_records, seed=7)
     state = init_state(spark, records, cache, SinglePartition(), 1, seed=123)
@@ -1847,13 +1406,13 @@ def mcmc_iters_per_sec(spark, n_records: int = 300, n_iters: int = 200):
     def _window() -> float:
         t0 = time.time()
         for _ in range(reps):
-            box[0] = transition_fused(box[0], "PCG-I", 10)
+            box[0] = transition_local(box[0], "PCG-I", n_sweeps=10)
         return (10 * reps) / (time.time() - t0)
 
     # discard one extra warmup window: the first fused sweep still pays
     # Arrow/codegen setup (the old best-of-2 existed for the same reason)
     _window()
-    # r14 (VERDICT r13 nit 2, adjudicated by tools/confirm_fused_decay.py):
+    # r14 (VERDICT r13 nit 2, adjudicated by an isolated decay probe):
     # the in-artifact monotone window decay ([156.6, 128.3, 98.7] it/s in
     # r13) was the chain's fresh->equilibrium TRANSIENT, not accumulation —
     # isolated probes show RSS flat (+0.4 MB over 28 windows), canary

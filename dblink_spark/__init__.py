@@ -7,7 +7,7 @@ idiomatic PySpark engine:
 - DataFrame/SQL for everything set-oriented (encoding, statistics, posterior
   analysis, evaluation metrics, I/O) so Catalyst handles pushdown, pruning,
   broadcast, and AQE.
-- Arrow-batched ``applyInPandas`` kernels (numpy) for the per-partition MCMC
+- Arrow-batched ``applyInArrow`` kernels (numpy) for the per-partition MCMC
   transition operator.
 - Beyond the reference surface: large-scale data-pipeline operators
   (deduplication, similarity search, text analysis, multimodal plumbing).

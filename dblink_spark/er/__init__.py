@@ -9,7 +9,7 @@ Layering (all reference citations point into /root/reference):
   (ref: AttributeIndex.scala, RecordsCache.scala).
 - model: the numpy Gibbs kernels (ref: GibbsUpdates.scala semantics).
 - state/sampler: the Markov chain as a DataFrame keyed by partition_id,
-  advanced by groupBy("partition_id").applyInPandas(kernel) — one Arrow
+  advanced by groupBy("partition_id").applyInArrow(kernel) — one Arrow
   round-trip + one shuffle per iteration, matching the reference's
   mapPartitions + partitionBy cadence (ref: State.scala, Sampler.scala).
 - partitioning: k-d tree entity-space partitioner fit via DataFrame

@@ -28,9 +28,7 @@ from dblink_spark.er.state import (
     State,
     prior_log_likelihood_term,
     transition,
-    transition_fused,
     transition_local,
-    transition_multisweep,
 )
 
 #: configs already warned about fusion being ignored on the driver-local
@@ -47,25 +45,24 @@ class SamplerOptions:
     thinning_interval: int = 1
     write_buffer_size: int = 10  # ref: Sampler.scala:57
     diagnostics_path: str | None = None
-    #: single-partition chains: run all iterations between save points as
-    #: fused sweeps inside one Spark job (see state.transition_fused). Saves
-    #: the per-job scheduling floor; diagnostics are still written once per
-    #: saved sample (matching the reference, Sampler.scala:107-108).
-    fuse_sweeps: bool = True
     #: multi-partition chains whose total record count is at most this run
     #: their per-iteration kernels driver-local (state.transition_local) —
     #: same chain content as the Spark path, without the per-job floor.
     #: 0 disables (always distribute). Driver-sized cap: the dense state is
     #: a few hundred bytes/record, so 2M records ≈ low-GB driver memory.
+    #: Single-partition chains always run driver-local, all iterations
+    #: between save points fused into one call; diagnostics are still
+    #: written once per saved sample (matching the reference,
+    #: Sampler.scala:107-108).
     local_exec_max_records: int = 2_000_000
     #: OPT-IN (r14): distributed multi-partition chains run up to this many
-    #: kernel sweeps per Spark job (state.transition_multisweep), amortizing
+    #: kernel sweeps per Spark job (state.transition's n_sweeps), amortizing
     #: the per-job plan+scheduling floor k× — measured 4.7 -> 37.8 it/s at
     #: rl10k p=4 going k=1 -> 8. Default 1 keeps the reference's
     #: one-job-per-iteration cadence (State.scala:78-99) and bit-parity
     #: with transition(); k>1 relaxes migration and θ to a k-sweep cadence
     #: (the documented chain-semantics difference — see
-    #: transition_multisweep). Sweeps never overrun a save point.
+    #: state.transition). Sweeps never overrun a save point.
     #: APPLIES ONLY on the distributed path: chains the sampler routes
     #: driver-local (<= ``local_exec_max_records``) have no per-job floor
     #: to amortize, so fusion is a no-op there and the setting is ignored
@@ -195,33 +192,31 @@ def sample(
     thin = max(opts.thinning_interval, 1)
 
     def next_emit_after(it: int) -> int:
-        """First post-burn-in iteration > ``it`` on the thinning grid —
-        the save-point arithmetic the fused (p=1) and multisweep (p>1)
-        branches must share (review r14: duplicated copies nine lines
-        apart would let the two paths' save cadences silently diverge)."""
+        """First post-burn-in iteration > ``it`` on the thinning grid: the
+        save point neither branch's fused sweeps may overrun."""
         base = max(it + 1, opts.burnin_interval + 1)
         r = (base - opts.burnin_interval) % thin
         return base if r == 0 else base + (thin - r)
     n_records = sum(state.cache.file_sizes.values())
-    run_local = (
-        state.num_partitions > 1
-        and opts.local_exec_max_records > 0
-        and n_records <= opts.local_exec_max_records
+    on_driver = (
+        state.num_partitions == 1
+        or 0 < n_records <= opts.local_exec_max_records
     )
     ms_warn_key = (
         opts.multisweep_k, opts.multisweep_burnin_k,
         n_records, opts.local_exec_max_records,
     )
     if (
-        run_local
+        on_driver
+        and state.num_partitions > 1
         and (opts.multisweep_k > 1 or opts.multisweep_burnin_k > 1)
         and ms_warn_key not in _MS_IGNORED_WARNED
     ):
-        # r14 ADVICE: the local path takes precedence over the multisweep
-        # branch, so a config asking for fusion on a driver-sized chain
-        # would otherwise see no fusion and no signal. Fusion only
-        # amortizes the DISTRIBUTED path's per-job floor; the local path
-        # has none, so ignoring it is correct — but say so once.
+        # r14 ADVICE: the local path takes precedence over multisweep, so
+        # a config asking for fusion on a driver-sized chain would
+        # otherwise see no fusion and no signal. Fusion only amortizes the
+        # DISTRIBUTED path's per-job floor; the local path has none, so
+        # ignoring it is correct — but say so once.
         # r15 ADVICE: once-guard keyed on the option tuple so repeated
         # short sample() calls with the same config warn exactly once per
         # process (docs/README promise "one-time", not per-call).
@@ -236,39 +231,35 @@ def sample(
             n_records, opts.local_exec_max_records,
         )
     while saved < sample_size:
-        if opts.fuse_sweeps and state.num_partitions == 1:
-            # jump straight to the next save point in one Spark job
-            state = transition_fused(
-                state, opts.sampler,
-                next_emit_after(state.iteration) - state.iteration,
-            )
-        elif run_local:
-            state = transition_local(state, opts.sampler)
-        elif opts.multisweep_k > 1 or (
-            opts.multisweep_burnin_k > 1
-            and state.iteration < opts.burnin_interval
-        ):
-            in_burnin = state.iteration < opts.burnin_interval
-            if in_burnin:
+        it = state.iteration
+        if on_driver:
+            # a single partition jumps straight to the next save point; on
+            # more, fusing would relax migration and θ for nothing
+            k = next_emit_after(it) - it if state.num_partitions == 1 else 1
+            state = transition_local(state, opts.sampler, n_sweeps=k)
+        else:
+            if it < opts.burnin_interval:
                 # fuse toward the burn-in boundary (phase switch exact)
                 kmax = max(opts.multisweep_burnin_k, opts.multisweep_k)
-                bound = opts.burnin_interval - state.iteration
+                bound = opts.burnin_interval - it
             else:
                 # fuse toward the next save point
                 kmax = opts.multisweep_k
-                bound = next_emit_after(state.iteration) - state.iteration
-            state = transition_multisweep(
-                state, opts.sampler, max(1, min(kmax, bound))
+                bound = next_emit_after(it) - it
+            k = max(1, min(kmax, bound))
+            # one sweep keeps the two-argument call that erbench/layers.py's
+            # fixed-signature `transition` wrapper accepts
+            state = (
+                transition(state, opts.sampler)
+                if k == 1
+                else transition(state, opts.sampler, n_sweeps=k)
             )
-        else:
-            state = transition(state, opts.sampler)
         it = state.iteration
         past_burnin = it > opts.burnin_interval
         on_thin = (it - opts.burnin_interval) % max(opts.thinning_interval, 1) == 0
         if past_burnin and on_thin:
             if writer:
-                # when the chain lives driver-local (fused single-partition or
-                # local multi-partition execution), build the sample as an
+                # when the chain lives driver-local, build the sample as an
                 # Arrow table and let the writer flush it via pyarrow — the
                 # per-save createDataFrame marshal + Spark write job otherwise
                 # costs ~10x the kernel time between save points at RLdata10000

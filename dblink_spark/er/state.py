@@ -47,7 +47,6 @@ from dataclasses import dataclass, replace
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -206,128 +205,27 @@ class State:
             self._df = _blocks_df_to_cluster_df(
                 self.block_df, self.cache.num_attributes
             )
-            return self._df
-        if self._df is None:
-            try:
-                # Arrow-native marshal (Spark 4.0+ createDataFrame accepts a
-                # pyarrow Table): no per-row Python lists, ~10x cheaper than
-                # the pandas path at 100k+ records.
-                tbl = pa.concat_tables(
-                    [
-                        _partition_state_to_pa(
-                            self.local_parts[pid],
-                            self.partition_fn(self.local_parts[pid].entities),
-                            pid,
-                            self.cache,
-                        )
-                        for pid in sorted(self.local_parts)
-                    ]
-                )
-                self._df = self.spark.createDataFrame(tbl, schema=STATE_SCHEMA)
-                return self._df
-            except TypeError:  # pragma: no cover - pre-4.0 Spark fallback
-                pass
-            pdfs = [
-                _partition_state_to_pdf(
-                    self.local_parts[pid],
-                    self.partition_fn(self.local_parts[pid].entities),
-                    pid,
-                    self.cache,
-                )
-                for pid in sorted(self.local_parts)
-            ]
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            # pandas infers the mostly-None summary scalars as float64
-            # (None -> NaN), which LongType rejects; force object dtype
-            pdf["loglik"] = np.array(
-                [None if pd.isna(v) else float(v) for v in pdf["loglik"]],
-                dtype=object,
+        elif self._df is None:
+            # Arrow-native marshal: createDataFrame takes the pyarrow table
+            # as is, no per-row Python lists
+            tbl = pa.concat_tables(
+                [
+                    _partition_state_to_pa(
+                        self.local_parts[pid],
+                        self.partition_fn(self.local_parts[pid].entities),
+                        pid,
+                        self.cache,
+                    )
+                    for pid in sorted(self.local_parts)
+                ]
             )
-            pdf["n_isolates"] = np.array(
-                [None if pd.isna(v) else int(v) for v in pdf["n_isolates"]],
-                dtype=object,
-            )
-            self._df = self.spark.createDataFrame(pdf, STATE_SCHEMA)
+            self._df = self.spark.createDataFrame(tbl, schema=STATE_SCHEMA)
         return self._df
 
 
 # ---------------------------------------------------------------------------
-# pandas <-> kernel marshalling
+# Arrow <-> kernel marshalling
 # ---------------------------------------------------------------------------
-
-
-def _pdf_to_partition_state(pdf: pd.DataFrame, num_attrs: int) -> PartitionState:
-    ents = np.array([np.asarray(v, dtype=np.int32) for v in pdf["ent_values"]])
-    rec_ids, rec_fids, link = [], [], []
-    val_chunks, dist_chunks = [], []
-    for e, (ids, fids, vals, dist) in enumerate(
-        zip(pdf["rec_ids"], pdf["rec_fids"], pdf["rec_values"], pdf["rec_dist"])
-    ):
-        rec_ids.extend(ids)
-        rec_fids.extend(fids)
-        link.extend([e] * len(ids))
-        val_chunks.append(np.frombuffer(bytes(vals), dtype="<i4"))
-        dist_chunks.append(np.frombuffer(bytes(dist), dtype=np.uint8))
-    R = len(rec_ids)
-    return PartitionState(
-        entities=ents.reshape(len(pdf), num_attrs),
-        rec_ids=np.asarray(rec_ids, dtype=str),
-        rec_fids=np.array(rec_fids, dtype=np.int32),
-        rec_values=(
-            np.concatenate(val_chunks).astype(np.int32).reshape(R, num_attrs)
-            if R
-            else np.empty((0, num_attrs), dtype=np.int32)
-        ),
-        rec_dist=(
-            np.concatenate(dist_chunks).astype(bool).reshape(R, num_attrs)
-            if R
-            else np.empty((0, num_attrs), dtype=bool)
-        ),
-        link=np.array(link, dtype=np.int64),
-    )
-
-
-def _partition_state_to_pdf(
-    ps: PartitionState, new_pids: np.ndarray, summary_pid: int, cache: RecordsCache
-) -> pd.DataFrame:
-    order = np.argsort(ps.link, kind="stable")
-    counts = np.bincount(ps.link, minlength=ps.num_entities)
-    bounds = np.concatenate(([0], np.cumsum(counts)))
-    rows = []
-    for e in range(ps.num_entities):
-        rs = order[bounds[e] : bounds[e + 1]]
-        rows.append(
-            {
-                "partition_id": int(new_pids[e]),
-                "is_summary": False,
-                "ent_values": ps.entities[e].tolist(),
-                "rec_ids": [ps.rec_ids[r] for r in rs],
-                "rec_fids": ps.rec_fids[rs].tolist(),
-                "rec_values": ps.rec_values[rs].astype("<i4").tobytes(),
-                "rec_dist": ps.rec_dist[rs].astype(np.uint8).tobytes(),
-                "loglik": None,
-                "n_isolates": None,
-                "agg_dist": None,
-                "rec_dist_hist": None,
-            }
-        )
-    loglik, n_iso, agg_dist, hist = partition_summary(ps, cache)
-    rows.append(
-        {
-            "partition_id": summary_pid,
-            "is_summary": True,
-            "ent_values": None,
-            "rec_ids": None,
-            "rec_fids": None,
-            "rec_values": None,
-            "rec_dist": None,
-            "loglik": loglik,
-            "n_isolates": int(n_iso),
-            "agg_dist": agg_dist.tolist(),
-            "rec_dist_hist": hist.tolist(),
-        }
-    )
-    return pd.DataFrame(rows)
 
 
 #: Arrow twin of STATE_SCHEMA (exact dtype mapping Spark uses for Arrow UDFs)
@@ -374,9 +272,9 @@ def _binary_column_to_array(col: pa.ChunkedArray, dtype, n_items: int) -> np.nda
 
 
 def _pa_to_partition_state(tbl: pa.Table, num_attrs: int) -> PartitionState:
-    """Arrow-native twin of ``_pdf_to_partition_state``: nested list columns
-    unpack via vectorized ``flatten()`` on the list offsets instead of
-    materializing millions of per-cell Python lists.
+    """Cluster rows (STATE_SCHEMA, no summary rows) to one PartitionState:
+    nested list columns unpack via vectorized ``flatten()`` on the list
+    offsets instead of materializing millions of per-cell Python lists.
 
     This is the decisive distributed-path optimization: at 300k records the
     Arrow→pandas conversion of ``array<array<int>>`` columns cost ~10s per
@@ -498,8 +396,7 @@ def _state_summary_row_pa(
 def _partition_state_to_pa(
     ps: PartitionState, new_pids: np.ndarray, summary_pid: int, cache: RecordsCache
 ) -> pa.Table:
-    """Arrow-native twin of ``_partition_state_to_pdf``: cluster rows plus
-    the in-band summary row."""
+    """One PartitionState as cluster rows plus the in-band summary row."""
     body = _ps_cluster_body_pa(ps, new_pids)
     loglik, n_iso, agg_dist, hist = partition_summary(ps, cache)
     return pa.concat_tables(
@@ -720,21 +617,18 @@ def run_fused_sweeps(
     num_partitions: int,
     pid: int,
     n_sweeps: int,
-    theta_per_sweep: bool = True,
 ) -> PartitionState:
     """`n_sweeps` consecutive Markov transitions over one partition's state.
 
-    Shared by the Spark `applyInPandas` kernel and the driver-local fused
-    path (`transition_fused(local=True)`) so both produce bit-identical
-    chains. Sweep ``j`` uses rng seed ``seed + j*num_partitions + pid`` —
-    exactly the seed the unfused path gives iteration ``j``. Between fused
-    sweeps θ is redrawn in place when ``theta_per_sweep`` (single
-    partition ⇒ local distortion counts are the global counts, so this is
-    the same Beta posterior the driver would sample; ref:
-    GibbsUpdates.scala:305-320). With ``theta_per_sweep=False`` the given
-    θ holds for ALL sweeps — the multi-partition fused variant
-    (``transition_multisweep``), where a per-sweep local redraw would
-    sample from partition-local counts, a different model.
+    Shared by the Spark kernel (`transition`) and the driver
+    (`transition_local`) so both produce bit-identical chains. Sweep ``j``
+    uses rng seed ``seed + j*num_partitions + pid`` — exactly the seed the
+    unfused path gives iteration ``j``. On a single-partition chain θ is
+    redrawn in place between fused sweeps: the partition's distortion
+    counts are the global counts, so this is the same Beta posterior the
+    driver would sample (ref: GibbsUpdates.scala:305-320). On more
+    partitions the given θ holds for ALL sweeps, since a per-sweep local
+    redraw would sample from partition-local counts, a different model.
 
     The state is canonicalized on entry (content-determined row order), so
     the chain does not depend on shuffle fetch order — the property that
@@ -746,7 +640,7 @@ def run_fused_sweeps(
     th = theta
     for j in range(n_sweeps):
         rng = np.random.default_rng(seed + j * num_partitions + pid)
-        if j > 0 and theta_per_sweep:
+        if j > 0 and num_partitions == 1:
             _, _, agg, _ = partition_summary(ps, cache)
             th = draw_theta(rng, cache, agg.reshape(num_attrs, num_files))
         ps = transition_partition(rng, ps, cache, th, mode)
@@ -819,7 +713,7 @@ def _kernel_salts(num_partitions: int, num_buckets: int) -> list[int] | None:
 
 
 def _salted_group(
-    df: DataFrame, num_partitions: int, num_buckets: int | None = None
+    df: DataFrame, num_partitions: int, num_buckets: int
 ) -> tuple[DataFrame, list[str]]:
     """Attach the collision-free salt column and return (df, grouping keys).
 
@@ -827,29 +721,17 @@ def _salted_group(
     pure function of partition_id, so chains are bit-identical with or
     without it — only task *placement* changes. ``num_buckets`` is the
     shuffle width the iteration query will run with (``_kernel_exec_conf``
-    scopes ``spark.sql.shuffle.partitions`` to the same value); when None,
-    the session conf is read as a fallback."""
+    scopes ``spark.sql.shuffle.partitions`` to the same value)."""
     if num_partitions <= 1:
         return df, ["partition_id"]
-    if num_buckets is not None:
-        m = num_buckets
-    else:
-        spark = df.sparkSession
-        try:
-            # Non-numeric values (e.g. "auto" on some platforms) or an AQE
-            # initialPartitionNum override make the bucket prediction wrong;
-            # placement is only an optimization, so degrade to unsalted.
-            m = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:  # noqa: BLE001 - conf absent or non-numeric
-            return df, ["partition_id"]
-    salts = _kernel_salts(num_partitions, m)
+    salts = _kernel_salts(num_partitions, num_buckets)
     if salts is None:
         return df, ["partition_id"]
     # Column expressions are plan-independent; memoize per (p, m) so the
     # per-iteration driver cost is one withColumn, not p+3 py4j
     # expression-construction round-trips (the transition loop calls this
     # every iteration — measured ~17 ms/iter at p=4 rebuilt fresh)
-    key = (num_partitions, m)
+    key = (num_partitions, num_buckets)
     sc = df.sparkSession.sparkContext
     hit = _SALT_EXPR_CACHE.get(key)
     # validate the cached Column was built under the LIVE context (a
@@ -918,63 +800,24 @@ def _resolve_cache(cache_ref) -> RecordsCache:
     return cache_ref.value if isinstance(cache_ref, Broadcast) else cache_ref
 
 
-def make_transition_kernel(
-    cache: RecordsCache,
-    theta: np.ndarray,
-    mode: str,
-    seed: int,
-    partition_fn: Callable[[np.ndarray], np.ndarray],
-    n_sweeps: int = 1,
-    num_partitions: int = 1,
-    theta_per_sweep: bool = True,
-):
-    """Build the applyInPandas kernel for one iteration (or, with
-    ``n_sweeps > 1``, several fused iterations — single-partition only; see
-    ``transition_fused``). theta/seed are captured in the closure — the
-    Python-native equivalent of the reference's per-iteration distProbs
-    broadcast (ref: State.scala:83-84). Sweep ``j`` uses rng seed
-    ``seed + j*num_partitions + pid``, exactly the seed the unfused path
-    would give iteration ``j``."""
-    cache_ref = cache
-    num_attrs = _resolve_cache(cache_ref).num_attributes
-    boot = make_worker_boot()
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        boot()  # stat-guard zipimport invalidation (operators/workerboot.py)
-        cache = _resolve_cache(cache_ref)
-        pid = int(key[0])
-        pdf = pdf[~pdf["is_summary"]]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in STATE_SCHEMA.fields])
-        ps = _pdf_to_partition_state(pdf, num_attrs)
-        ps = run_fused_sweeps(
-            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps,
-            theta_per_sweep,
-        )
-        new_pids = partition_fn(ps.entities)
-        return _partition_state_to_pdf(ps, new_pids, pid, cache)
-
-    return kernel
-
-
 def make_transition_kernel_arrow(
     cache: RecordsCache,
     theta: np.ndarray,
     mode: str,
     seed: int,
     partition_fn: Callable[[np.ndarray], np.ndarray],
-    n_sweeps: int = 1,
-    num_partitions: int = 1,
-    theta_per_sweep: bool = True,
+    n_sweeps: int,
+    num_partitions: int,
 ):
-    """``applyInArrow`` twin of :func:`make_transition_kernel`: identical
-    chain content (same ``run_fused_sweeps``, same canonicalization, same
-    seeds) but the state crosses the JVM/Python boundary as packed Arrow
-    buffers. Accepts EITHER cluster rows (first transition after init/
-    load) or BLOCK rows (steady state, detected by the ``counts`` column)
-    and always emits BLOCK rows — grouped Arrow execution costs ~30-40us
-    per input row, so keeping the loop in block format turns the group
-    boundary from O(clusters) rows into O(p) per kernel."""
+    """The ``applyInArrow`` kernel for one transition of ``n_sweeps``
+    sweeps. theta/seed are captured in the closure — the Python-native
+    equivalent of the reference's per-iteration distProbs broadcast (ref:
+    State.scala:83-84). The state crosses the JVM/Python boundary as packed
+    Arrow buffers. Accepts EITHER cluster rows (first transition after
+    init/load) or BLOCK rows (steady state, detected by the ``counts``
+    column) and always emits BLOCK rows — grouped Arrow execution costs
+    ~30-40us per input row, so keeping the loop in block format turns the
+    group boundary from O(clusters) rows into O(p) per kernel."""
     cache_ref = cache
     num_attrs = _resolve_cache(cache_ref).num_attributes
     boot = make_worker_boot()
@@ -984,8 +827,7 @@ def make_transition_kernel_arrow(
 
         boot()  # stat-guard zipimport invalidation (operators/workerboot.py)
         cache = _resolve_cache(cache_ref)
-        k0 = key[0]
-        pid = int(k0.as_py() if hasattr(k0, "as_py") else k0)
+        pid = int(key[0].as_py())
         tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
         if tbl.num_rows == 0:
             return _PA_BLOCK_SCHEMA.empty_table()
@@ -994,42 +836,12 @@ def make_transition_kernel_arrow(
         else:
             ps = _pa_to_partition_state(tbl, num_attrs)
         ps = run_fused_sweeps(
-            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps,
-            theta_per_sweep,
+            ps, cache, theta, mode, seed, num_partitions, pid, n_sweeps
         )
         new_pids = partition_fn(ps.entities)
         return _block_output_table(ps, new_pids, pid, cache)
 
     return kernel
-
-
-def _apply_kernel_grouped(
-    df_in: DataFrame,
-    keys: list[str],
-    cache: RecordsCache,
-    theta: np.ndarray,
-    mode: str,
-    seed: int,
-    partition_fn: Callable[[np.ndarray], np.ndarray],
-    n_sweeps: int = 1,
-    num_partitions: int = 1,
-    theta_per_sweep: bool = True,
-) -> tuple[DataFrame, bool]:
-    """Group by the kernel keys and apply the transition kernel. Returns
-    ``(new_df, is_block)``: Arrow-capable Spark (4.0+) runs the block-format
-    loop; the pandas fallback keeps the cluster-row format."""
-    grouped = df_in.groupBy(*keys)
-    if hasattr(grouped, "applyInArrow"):
-        kernel = make_transition_kernel_arrow(
-            cache, theta, mode, seed, partition_fn, n_sweeps,
-            num_partitions, theta_per_sweep,
-        )
-        return grouped.applyInArrow(kernel, BLOCK_SCHEMA), True
-    kernel = make_transition_kernel(
-        cache, theta, mode, seed, partition_fn, n_sweeps, num_partitions,
-        theta_per_sweep,
-    )
-    return grouped.applyInPandas(kernel, STATE_SCHEMA), False
 
 
 def _cache_ref(state: State, df: DataFrame):
@@ -1105,7 +917,10 @@ def _consume_state_dfs(state: State, old_dfs) -> None:
         state._released = True
 
 
-def _require_live(state: State, op: str) -> None:
+def _check_advance(state: State, op: str, n_sweeps: int) -> None:
+    """``state`` can be advanced by ``n_sweeps`` sweeps."""
+    if n_sweeps < 1:
+        raise ValueError("n_sweeps must be >= 1")
     if state._released:
         raise StateConsumedError(
             f"{op}: state at iteration {state.iteration} was already "
@@ -1115,21 +930,77 @@ def _require_live(state: State, op: str) -> None:
         )
 
 
-def transition(
-    state: State, mode: str, phase_sink: dict[str, float] | None = None
+def _successor(
+    state: State,
+    n_sweeps: int,
+    theta: np.ndarray,
+    rng: np.random.Generator,
+    summary: SummaryVars,
+    block_df: DataFrame | None = None,
+    local_parts: "dict[int, PartitionState] | None" = None,
 ) -> State:
-    """One Markov transition (ref: State.scala:78-99 `nextState`):
-    θ update (driver Beta draws) → partition kernels (one shuffle) →
-    in-band summary collection.
+    """The state ``n_sweeps`` sweeps after ``state``, holding its cluster
+    rows as ``block_df`` (Spark) or ``local_parts`` (driver); the one
+    retirement path both executors share.
 
-    CONSUMES its input past iteration 0: the previous state's checkpoint
-    storage is released once the new state materializes (r13 — pre-r13
-    this leaked ~60 MB/iteration at 1M records), so reading or advancing
-    a STALE mid-chain handle you already transitioned past raises
-    ``StateConsumedError`` by name (r14, the r13 ADVICE: previously the
-    reuse surfaced as a raw CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND from deep
-    inside Spark). Iteration-0 roots and `assign_partitions` forks stay
-    readable.
+    The predecessor is CONSUMED past iteration 0: its checkpoint storage is
+    released now, not at GC time (~60 MB per iteration at 1M records), so
+    reading or advancing a STALE mid-chain handle raises
+    ``StateConsumedError`` by name. The chain ROOT (iteration 0) is never
+    released: init states are legitimately reused as fork points
+    (``part.fit(s0.df)`` after a warm transition; multi-partitioning
+    sweeps)."""
+    old_dfs = [state._df, state.block_df] if state.iteration > 0 else []
+    new_state = replace(
+        state,
+        iteration=state.iteration + n_sweeps,
+        _df=None,
+        block_df=block_df,
+        local_parts=local_parts,
+        theta=theta,
+        rng=rng,
+        summary=summary,
+        current_seed=state.current_seed + n_sweeps * state.num_partitions,
+    )
+    _consume_state_dfs(state, old_dfs)
+    return new_state
+
+
+def transition(
+    state: State,
+    mode: str,
+    phase_sink: dict[str, float] | None = None,
+    n_sweeps: int = 1,
+) -> State:
+    """One Markov transition on Spark (ref: State.scala:78-99 `nextState`):
+    θ update (driver Beta draws) → partition kernels running ``n_sweeps``
+    sweeps each (one Spark job, one shuffle) → in-band summary collection.
+
+    ``n_sweeps > 1`` fuses sweeps into the one job, amortizing the per-job
+    plan+scheduling floor (~0.157 s per transition at rl10k p=4). On a
+    single-partition chain this is exact: θ is redrawn between sweeps from
+    the partition's (= global) distortion counts, bit-identical to
+    :func:`transition_local` with the same ``n_sweeps``. On more partitions
+    it relaxes the chain (opt-in, ``SamplerOptions.multisweep_k``; k=1 is
+    the reference cadence):
+
+    - **Migration every k sweeps.** Clusters move to the partition of
+      their new entity values only at job boundaries, so for sweeps 2..k
+      a cluster whose entity drifted across a KD-tree cell boundary keeps
+      sampling against its OLD partition's inverted index — the class of
+      approximation the partitioned model already makes within one sweep,
+      relaxed k× further.
+    - **θ every k sweeps.** θ is drawn ONCE per job from the previous
+      global summary and held for all k sweeps (see `run_fused_sweeps`).
+
+    Measured: rl10k 1000-iteration 2-partition chains F1/ARI 0.764 at k=1,
+    0.725 at k=2, 0.713 at k=8; throughput at p=4 4.7/10.6/20.2/37.8 it/s
+    for k=1/2/4/8; burn-in fused at k=8 + sampling at k=1
+    (``multisweep_burnin_k``) lands 0.7643, equal to k=1. At 1M records
+    the win saturates at k=2 and larger k buys nothing further
+    (BENCH_1M_MULTISWEEP_r16).
+
+    CONSUMES its input past iteration 0 (see `_successor`).
 
     ``phase_sink`` (bench/profiling only): when given, receives
     ``{"plan": s, "job": s}`` — the driver-side cost (θ draw, salt
@@ -1139,9 +1010,8 @@ def transition(
     None (two branch checks)."""
     import time as _time
 
-    _require_live(state, "transition")
+    _check_advance(state, "transition", n_sweeps)
     t0 = _time.time() if phase_sink is not None else 0.0
-    cache = state.cache
     theta, rng = _next_theta(state)
 
     # steady state keeps the chain in block format (O(p) grouped rows per
@@ -1149,323 +1019,80 @@ def transition(
     src = state.block_df if state.block_df is not None else state.df
     p = state.num_partitions
     df_in, keys = _salted_group(src, p, num_buckets=p)
+    kernel = make_transition_kernel_arrow(
+        _cache_ref(state, df_in), theta, mode, state.current_seed,
+        state.partition_fn, n_sweeps, p,
+    )
     # _kernel_exec_conf must wrap localCheckpoint too: the checkpoint call
     # builds the QueryExecution (and snapshots SQLConf) even though the lazy
     # materialization only happens at the summary collect below.
     with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-        new_df, is_block = _apply_kernel_grouped(
-            df_in, keys, _cache_ref(state, df_in), theta, mode,
-            state.current_seed, state.partition_fn, num_partitions=p,
-        )
         # Truncate lineage every iteration: the DataFrame analogue of the
         # reference's persist + periodic checkpoint (ref: Sampler.scala:56,
         # util/PeriodicCheckpointer.scala) — without this the plan grows per
         # iteration and Catalyst analysis time dominates. Lazy: the summary
         # collect right below materializes the checkpoint, so each transition
         # costs ONE job instead of two.
-        new_df = new_df.localCheckpoint(eager=False)
+        new_df = (
+            df_in.groupBy(*keys)
+            .applyInArrow(kernel, BLOCK_SCHEMA)
+            .localCheckpoint(eager=False)
+        )
         if phase_sink is not None:
             t1 = _time.time()
             phase_sink["plan"] = t1 - t0
-        summary = collect_summary(new_df, cache)
+        summary = collect_summary(new_df, state.cache)
         if phase_sink is not None:
             phase_sink["job"] = _time.time() - t1
-    # never release the chain ROOT (iteration 0): init states are
-    # legitimately reused as fork points (part.fit(s0.df) after a
-    # warm fused transition; multi-partitioning sweeps); from
-    # iteration 1 on the predecessor is genuinely retired chain state
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
-    )
-    new_state = replace(
-        state,
-        iteration=state.iteration + 1,
-        _df=None if is_block else new_df,
-        block_df=new_df if is_block else None,
-        local_parts=None,
-        theta=theta,
-        rng=rng,
-        summary=summary,
-        current_seed=state.current_seed + state.num_partitions,
-    )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
-
-
-def transition_fused(
-    state: State, mode: str, n_sweeps: int, local: bool = True
-) -> State:
-    """``n_sweeps`` Markov transitions without per-iteration Spark jobs.
-
-    Only valid for single-partition chains: no clusters can migrate, and the
-    partition's distortion counts are the global counts, so the per-sweep θ
-    update (M15) can run inside the sweep loop. A single-partition chain has
-    no distributable work — it IS a driver-sized problem (the reference runs
-    these on local[1], docs/guide.md:132-141) — so by default the sweeps run
-    driver-local on the cached numpy state, skipping the Arrow round-trip
-    and job-scheduling floor entirely; `state.df` rematerializes lazily when
-    a DataFrame consumer (chain writer, save) needs it. ``local=False``
-    keeps the Spark `applyInPandas` execution (one job per call). Both paths
-    call `run_fused_sweeps`, so they produce bit-identical chains. The chain
-    is statistically identical to the unfused sampler (same kernels, same
-    seeds per sweep); only θ's RNG stream differs, so a fused run is not
-    bit-identical to an unfused one.
-    """
-    _require_live(state, "transition_fused")
-    if state.num_partitions != 1:
-        raise ValueError("transition_fused requires a single-partition chain")
-    if n_sweeps < 1:
-        raise ValueError("n_sweeps must be >= 1")
-    cache = state.cache
-    theta, rng = _next_theta(state)
-    if local:
-        ps = state.local_parts[0] if state.local_parts else None
-        if ps is None:
-            if hasattr(state.df, "toArrow"):
-                import pyarrow.compute as pc
-
-                tbl = state.df.toArrow()
-                tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
-                ps = _pa_to_partition_state(tbl, cache.num_attributes)
-            else:
-                pdf = state.df.toPandas()
-                ps = _pdf_to_partition_state(
-                    pdf[~pdf["is_summary"]], cache.num_attributes
-                )
-        ps = run_fused_sweeps(
-            ps, cache, theta, mode, state.current_seed, 1, 0, n_sweeps
-        )
-        # Canonicalize record order (stable-grouped by entity) — the exact
-        # normalization a DataFrame round trip applies via
-        # _partition_state_to_pdf — so local continuation, save/resume, and
-        # the Spark fused path all see identical array layouts and produce
-        # bit-identical chains and float sums.
-        order = np.argsort(ps.link, kind="stable")
-        ps = PartitionState(
-            entities=ps.entities,
-            rec_ids=ps.rec_ids[order],
-            rec_fids=ps.rec_fids[order],
-            rec_values=ps.rec_values[order],
-            rec_dist=ps.rec_dist[order],
-            link=ps.link[order],
-        )
-        loglik, n_iso, agg, hist = partition_summary(ps, cache)
-        A, Fn = cache.num_attributes, len(cache.file_ids)
-        summary = SummaryVars(
-            num_isolates=int(n_iso),
-            log_likelihood=float(loglik),
-            agg_distortions=agg.reshape(A, Fn),
-            rec_distortions=hist,
-        )
-        # never release the chain ROOT (iteration 0): init states are
-        # legitimately reused as fork points (part.fit(s0.df) after a
-        # warm fused transition; multi-partitioning sweeps); from
-        # iteration 1 on the predecessor is genuinely retired chain state
-        old_dfs = (
-            [state._df, state.block_df] if state.iteration > 0 else []
-        )
-        new_state = replace(
-            state,
-            iteration=state.iteration + n_sweeps,
-            _df=None,
-            block_df=None,
-            local_parts={0: ps},
-            theta=theta,
-            rng=rng,
-            summary=summary,
-            current_seed=state.current_seed + n_sweeps,
-        )
-    else:
-        src = state.block_df if state.block_df is not None else state.df
-        p = state.num_partitions
-        df_in, keys = _salted_group(src, p, num_buckets=p)
-        with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-            new_df, is_block = _apply_kernel_grouped(
-                df_in, keys, _cache_ref(state, df_in), theta, mode,
-                state.current_seed, state.partition_fn, n_sweeps=n_sweeps,
-                num_partitions=p,
-            )
-            new_df = new_df.localCheckpoint(eager=False)
-            summary = collect_summary(new_df, cache)
-        # never release the chain ROOT (iteration 0): init states are
-        # legitimately reused as fork points (part.fit(s0.df) after a
-        # warm fused transition; multi-partitioning sweeps); from
-        # iteration 1 on the predecessor is genuinely retired chain state
-        old_dfs = (
-            [state._df, state.block_df] if state.iteration > 0 else []
-        )
-        new_state = replace(
-            state,
-            iteration=state.iteration + n_sweeps,
-            _df=None if is_block else new_df,
-            block_df=new_df if is_block else None,
-            local_parts=None,
-            theta=theta,
-            rng=rng,
-            summary=summary,
-            current_seed=state.current_seed + n_sweeps * state.num_partitions,
-        )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
-
-
-def transition_multisweep(
-    state: State, mode: str, n_sweeps: int,
-    phase_sink: dict[str, float] | None = None,
-) -> State:
-    """``n_sweeps`` kernel sweeps per Spark job on a MULTI-partition chain
-    (VERDICT r13 task 3) — the distributed fusion ``transition_fused``
-    provides for p=1.
-
-    The measured per-iteration floor is structural: ~0.157s of driver
-    plan-build + Python-job scheduling per transition at rl10k p=4
-    (bench ``er_iterfloor_*``), one job per iteration being the
-    reference's own cadence (ref: State.scala:78-99). Fusing k sweeps
-    into each job amortizes that floor k× — the kernels loop k times on
-    the partition state they already hold in memory, so the extra sweeps
-    cost only their numpy compute.
-
-    CHAIN-SEMANTICS DIFFERENCE vs k unfused transitions (opt-in, k=1 is
-    bit-identical to ``transition`` — pinned in tests/test_er_mcmc.py):
-
-    - **Migration every k sweeps.** Clusters move to the partition of
-      their (new) entity values only at job boundaries, so for sweeps
-      2..k a cluster whose entity drifted across a KD-tree cell boundary
-      keeps sampling against its OLD partition's inverted index. Same
-      class of approximation the partitioned model already makes within
-      one sweep (the reference's partitions, too, only exchange at
-      iteration boundaries); it relaxes k× further.
-    - **θ every k sweeps.** θ is drawn ONCE per job from the previous
-      global summary and held fixed for all k sweeps (a per-sweep redraw
-      inside a partition would sample from partition-LOCAL distortion
-      counts — a different posterior; that exact redraw is only valid at
-      p=1, where ``transition_fused`` does it). The (θ, linkage) blocked
-      scan remains a valid sampler — each block conditions on the
-      other's current value — just on a k-sweep cadence.
-
-    Both relaxations vanish at k=1. MEASURED quality cost (rl10k
-    reference config end-to-end, 1000-iteration chains, distributed
-    2-partition): F1/ARI 0.764 at k=1, 0.725 at k=2, 0.713 at k=8 — and
-    a 2000-iteration k=8 chain lands 0.703, so extra length does NOT
-    buy the cadence back at this scale. Throughput at p=4 scales
-    4.7/10.6/20.2/37.8 it/s for k=1/2/4/8. The honest trade: use k>1
-    where throughput is the binding constraint (burn-in, exploratory
-    runs, partition-count sweeps) and k=1 reference cadence for the
-    chains whose samples you keep — the measured best-of-both is
-    ``SamplerOptions.multisweep_burnin_k``: burn-in fused at k=8 +
-    sampling at k=1 lands F1/ARI 0.772 on the same rl10k workload
-    (kept-sample quality fully preserved, burn-in ~8x). The bench tracks
-    all three sides every round (VERDICT r14 task 2): throughput
-    (``er_rl10k_multisweep4p_k*``), the pessimal full-chain k=8 quality
-    pin (``er_rl10k_multisweep_f1/ari``), and the recommended
-    burn-in-fused config's kept-sample quality
-    (``er_rl10k_burninfused_f1/ari``).
-
-    AT SCALE the sweet spot SHRINKS (r15, BENCH_1M_MULTISWEEP_r15.json —
-    1M records, interleaved k cycles, quiet host): the per-job floor the
-    fusion amortizes is a small share of a 1M iteration, so the win
-    saturates at k=2 (1.63x/1.42x/1.42x sec-per-iter at p=8/16/32) and
-    LARGER k erodes it (k=8: 1.12x/0.97x/1.12x) — sweeps 2..k sample
-    against progressively staler partitions and a fixed θ, and those
-    kernels run measurably slower. Equal-sweep quality at 1M shows no
-    k=8 penalty on the early chain (64-sweep final states: F1 0.157
-    fused vs 0.062 unfused from the same init + seed stream, 1.8x less
-    wall). Recommended k by regime: job-floor-bound chains (rl10k-class,
-    <~100k records/partition-count) take k=8 burn-in; kernel-bound 1M+
-    chains take k=2."""
-    import time as _time
-
-    _require_live(state, "transition_multisweep")
-    if n_sweeps < 1:
-        raise ValueError("n_sweeps must be >= 1")
-    t0 = _time.time() if phase_sink is not None else 0.0
-    cache = state.cache
-    theta, rng = _next_theta(state)
-    src = state.block_df if state.block_df is not None else state.df
-    p = state.num_partitions
-    df_in, keys = _salted_group(src, p, num_buckets=p)
-    with _kernel_exec_conf(df_in.sparkSession, shuffle_partitions=p):
-        new_df, is_block = _apply_kernel_grouped(
-            df_in, keys, _cache_ref(state, df_in), theta, mode,
-            state.current_seed, state.partition_fn, n_sweeps=n_sweeps,
-            num_partitions=p, theta_per_sweep=False,
-        )
-        new_df = new_df.localCheckpoint(eager=False)
-        if phase_sink is not None:
-            t1 = _time.time()
-            phase_sink["plan"] = t1 - t0
-        summary = collect_summary(new_df, cache)
-        if phase_sink is not None:
-            phase_sink["job"] = _time.time() - t1
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
-    )
-    new_state = replace(
-        state,
-        iteration=state.iteration + n_sweeps,
-        _df=None if is_block else new_df,
-        block_df=new_df if is_block else None,
-        local_parts=None,
-        theta=theta,
-        rng=rng,
-        summary=summary,
-        current_seed=state.current_seed + n_sweeps * p,
-    )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
+    return _successor(state, n_sweeps, theta, rng, summary, block_df=new_df)
 
 
 def _df_to_local_parts(
     df: DataFrame, num_attrs: int
 ) -> dict[int, PartitionState]:
-    """Collect a state DataFrame into driver-local per-partition states
-    (Arrow-native on Spark 4.0+, pandas fallback otherwise)."""
-    if hasattr(df, "toArrow"):
-        import pyarrow.compute as pc
+    """Collect a state DataFrame into driver-local per-partition states."""
+    import pyarrow.compute as pc
 
-        tbl = df.toArrow()
-        tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
-        pids = np.unique(
-            tbl.column("partition_id").to_numpy(zero_copy_only=False)
-        )
-        return {
-            int(pid): _pa_to_partition_state(
-                tbl.filter(pc.equal(tbl.column("partition_id"), int(pid))),
-                num_attrs,
-            )
-            for pid in pids
-        }
-    pdf = df.toPandas()
-    pdf = pdf[~pdf["is_summary"]]
+    tbl = df.toArrow()
+    tbl = tbl.filter(pc.equal(tbl.column("is_summary"), False))
+    pids = np.unique(tbl.column("partition_id").to_numpy(zero_copy_only=False))
     return {
-        int(pid): _pdf_to_partition_state(grp, num_attrs)
-        for pid, grp in pdf.groupby("partition_id")
+        int(pid): _pa_to_partition_state(
+            tbl.filter(pc.equal(tbl.column("partition_id"), int(pid))),
+            num_attrs,
+        )
+        for pid in pids
     }
 
 
-def transition_local(state: State, mode: str) -> State:
-    """One Markov transition executed entirely on the driver.
+def transition_local(state: State, mode: str, n_sweeps: int = 1) -> State:
+    """One Markov transition of ``n_sweeps`` sweeps executed entirely on
+    the driver.
 
-    Same chain semantics as :func:`transition` — per-partition kernels with
-    seed ``current_seed + pid``, θ drawn once from the driver RNG, clusters
-    migrated to the partition of their new entity values — but without the
-    per-iteration Spark job: kernels run sequentially on cached numpy
-    states and migration is an in-memory split+concat
-    (``model.split_partition_state`` / ``concat_partition_states``).
+    Same chain as :func:`transition` with the same ``n_sweeps`` — the same
+    `run_fused_sweeps` per partition with seed ``current_seed + pid``, θ
+    drawn once from the driver RNG, clusters migrated to the partition of
+    their new entity values — but without the per-iteration Spark job:
+    kernels run sequentially on cached numpy states and migration is an
+    in-memory split+concat (``model.split_partition_state`` /
+    ``concat_partition_states``). `state.df` rematerializes lazily when a
+    DataFrame consumer (chain writer, save) needs it.
 
-    The kernels canonicalize on entry, so a chain advanced locally produces
-    the SAME cluster content as the Spark ``applyInPandas`` execution
-    (pinned by tests/test_er_mcmc.py::test_local_vs_spark_multi_partition);
-    float log-likelihood sums match bit-exactly for ≤2 partitions (IEEE
-    addition is commutative) and to reordering rounding beyond that.
+    The kernels canonicalize on entry, so a chain advanced here has the
+    SAME cluster content as the Spark execution (pinned by
+    tests/test_er_mcmc.py::test_local_vs_spark_multi_partition); float
+    log-likelihood sums match bit-exactly for ≤2 partitions (IEEE addition
+    is commutative) and to reordering rounding beyond that.
 
     Use when the whole state comfortably fits on the driver — the sampler
-    gates it on total record count. The Spark path remains the execution
-    strategy at scale; this removes the ~1.5 s/iteration job floor that
-    dominates driver-sized problems (the reference runs these workloads on
-    local[1], docs/guide.md:132-141).
-    """
-    _require_live(state, "transition_local")
+    runs every single-partition chain here (it IS a driver-sized problem;
+    the reference runs these on local[1], docs/guide.md:132-141) and gates
+    multi-partition chains on total record count. The Spark path remains
+    the execution strategy at scale; this removes the ~1.5 s/iteration job
+    floor that dominates driver-sized problems.
+
+    CONSUMES its input past iteration 0 (see `_successor`)."""
+    _check_advance(state, "transition_local", n_sweeps)
     cache = state.cache
     num_attrs = cache.num_attributes
     theta, rng = _next_theta(state)
@@ -1474,12 +1101,13 @@ def transition_local(state: State, mode: str) -> State:
         parts = _df_to_local_parts(state.df, num_attrs)
     P = state.num_partitions
 
-    from dblink_spark.er.model import concat_partition_states, split_partition_state
+    from dblink_spark.er.model import concat_partition_states
 
     swept: dict[int, PartitionState] = {}
     for pid in sorted(parts):
         swept[pid] = run_fused_sweeps(
-            parts[pid], cache, theta, mode, state.current_seed, P, pid, 1
+            parts[pid], cache, theta, mode, state.current_seed, P, pid,
+            n_sweeps,
         )
 
     # summaries on the post-sweep, pre-migration states (what the Spark
@@ -1510,27 +1138,9 @@ def transition_local(state: State, mode: str) -> State:
         ).items():
             buckets.setdefault(t, []).append(sub)
     migrated = {t: concat_partition_states(subs) for t, subs in buckets.items()}
-
-    # never release the chain ROOT (iteration 0): init states are
-    # legitimately reused as fork points (part.fit(s0.df) after a
-    # warm fused transition; multi-partitioning sweeps); from
-    # iteration 1 on the predecessor is genuinely retired chain state
-    old_dfs = (
-        [state._df, state.block_df] if state.iteration > 0 else []
+    return _successor(
+        state, n_sweeps, theta, rng, summary, local_parts=migrated
     )
-    new_state = replace(
-        state,
-        iteration=state.iteration + 1,
-        _df=None,
-        block_df=None,
-        local_parts=migrated,
-        theta=theta,
-        rng=rng,
-        summary=summary,
-        current_seed=state.current_seed + P,
-    )
-    _consume_state_dfs(state, old_dfs)
-    return new_state
 
 
 class PartitionBudgetError(RuntimeError):

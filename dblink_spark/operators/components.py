@@ -24,12 +24,7 @@ neighborhood minimum rides an unordered WINDOW over the node id, so a
 hub node's edge rows are buffered (spillably) in that node's window
 state rather than map-side combined — WindowExec spills, so a hub is a
 straggler ceiling, not an OOM, but the per-round exchange always carries
-the full edge volume. For DENSE pair graphs (|E| >> |V|, e.g. the
-near-dup clique families) `min_neighbor_contraction` removes that
-full-volume round up front: its per-node minimum is a map-side
-partial-aggregated groupBy (a hub node costs one counter per map task,
-never a buffered neighborhood), and the star rounds then run on the
-contracted ~|V|-sized edge set.
+the full edge volume.
 """
 
 from __future__ import annotations
@@ -98,70 +93,12 @@ def _small_star(edges: DataFrame, oriented: bool = False) -> DataFrame:
     )
 
 
-def min_neighbor_contraction(edges: DataFrame) -> DataFrame:
-    """ONE exact contraction round over a (u, v) edge relation: with
-    ``f(x) = min({x} ∪ N(x))``, emit
-
-        E' = {(f(x), x) : f(x) != x}                       (star edges)
-           ∪ {(f(u), f(v)) : (u, v) ∈ E, f(u) != f(v)}     (rewritten edges)
-
-    canonicalized (small, large) and distinct. ``closure(E') ==
-    closure(E)`` EXACTLY, with the same node set and the same per-
-    component minima:
-
-    - every E' edge connects nodes of one original component (f(x) is x
-      or a neighbor of x);
-    - every original edge (u, v) is re-connected via the path
-      u – f(u) – f(v) – v (star, rewritten, star — degenerate legs drop
-      as self-loops);
-    - a component's minimum m is a fixpoint (f(m) = m, all neighbors are
-      larger), every other node x has f(x) < x so its star edge exists,
-      and m itself survives through its neighbors' star edges — so no
-      node of a >=2-node component is lost and min labels are unchanged.
-
-    This is NOT the naive per-bucket star emit (which loses edges — the
-    4-node counterexample (1,3),(2,4),(3,4) splits under star-only
-    emission; pinned in tests/test_components.py): the rewritten edges
-    carry exactly the cross-star connectivity the stars alone lose.
-
-    Why it beats a closure round on DENSE graphs (guide §2.3 — aggregate
-    before you shuffle): ``f`` is a map-side partial-aggregated
-    groupBy-min over the bidirectional edges (the shuffle carries one row
-    per distinct node per map task, never a hub's buffered neighborhood
-    — a star round's window ships and buffers the full 2|E| rows), the
-    two f-attach joins are AQE-sized (broadcast at gate scale where the
-    node table is tiny, shuffled at 100 TB), and the closing distinct
-    partial-aggregates map-side — on a near-clique graph the rewritten
-    edges collapse to ~|V| rows before they ever reach the exchange.
-    The caller must pass a MATERIALIZED relation (checkpoint/persist):
-    ``edges`` feeds both the aggregate and the rewrite."""
-    bidir = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    f = bidir.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("f"))
-    rewritten = (
-        edges.join(f.select(F.col("u"), F.col("f").alias("fu")), "u")
-        .join(
-            f.select(F.col("u").alias("v"), F.col("f").alias("fv")), "v"
-        )
-        .filter(F.col("fu") != F.col("fv"))
-        .select(
-            F.least("fu", "fv").alias("u"), F.greatest("fu", "fv").alias("v")
-        )
-    )
-    stars = f.filter(F.col("f") != F.col("u")).select(
-        F.col("f").alias("u"), F.col("u").alias("v")
-    )
-    return rewritten.union(stars).distinct()
-
-
 def connected_components(
     pairs: DataFrame,
     src: str = "v1",
     dst: str = "v2",
     max_rounds: int = 50,
     assume_distinct: bool = False,
-    pre_contract: bool = False,
 ) -> DataFrame:
     """Transitive closure of a pair set: ``(node, component)`` with
     ``component`` = the smallest node id in the node's connected component.
@@ -186,18 +123,6 @@ def connected_components(
     minima are duplicate-insensitive) — at worst the first convergence
     signature is computed on the duplicated set, which only delays
     convergence detection by one round, never changes the fixpoint.
-
-    ``pre_contract=True`` (r17, guide §2.3/§2.4) runs ONE
-    `min_neighbor_contraction` round on the materialized entry relation
-    before the star alternation — value-exact for ANY input (see the
-    helper's proof), and the right call for DENSE pair graphs (the
-    near-dup clique families: the k=64/t=0.3 hand-off feeds ~2.1M pairs
-    over ~4.3k nodes), where it replaces the first star round's
-    full-edge-volume window exchange with a map-side-combinable
-    aggregate + AQE-sized joins and hands the O(log n) alternation a
-    ~|V|-sized edge set. Leave it off for sparse or near-empty pair sets
-    (the t=0.99 contracted families) — there the extra checkpoint round
-    costs more than the first star round it would save.
     """
     edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).filter(
         F.col("u") != F.col("v")
@@ -209,11 +134,7 @@ def connected_components(
         return edges.select(
             F.col("u").alias("node"), F.col("v").alias("component")
         )
-    if pre_contract:
-        # exact closure-preserving contraction (see min_neighbor_contraction);
-        # the entry checkpoint above is the materialization its two
-        # consumers (the f aggregate and the rewrite joins) share
-        edges = min_neighbor_contraction(edges).localCheckpoint(eager=True)
+
     def _sig(df: DataFrame):
         # one-job convergence probe: (count, order-insensitive hash-sum).
         # xxhash64 collisions could only FALSELY signal convergence, and the

@@ -240,7 +240,7 @@ class Project:
             # r14 opt-in knobs (absent from reference configs — defaults
             # preserve the reference cadence exactly): multisweepK > 1
             # fuses k kernel sweeps per Spark job on distributed
-            # multi-partition chains (state.transition_multisweep);
+            # multi-partition chains (state.transition's n_sweeps);
             # localExecMaxRecords overrides the driver-local routing cap
             # (0 forces the distributed path)
             multisweep_k=int(params.get("multisweepK", 1)),

@@ -683,15 +683,6 @@ def bottomk_components(
     # assume_distinct: both pair arms emit unique (doc1, doc2) rows by
     # construction (carry ends in a distinct; wide emits one row per
     # distinct candidate) — skip the closure's canonicalizing exchange.
-    # r17 measured-and-rejected here: pre_contract=True (the exact
-    # min-neighbor contraction, operators/components.py) cuts the star
-    # rounds' edge volume 484x on the k=64/t=0.3 hand-off (2,089,274 ->
-    # 4,315) but LOSES ~0.25s at gate scale (interleaved closure A/B best
-    # 2.18 vs 2.44s; end-to-end within noise both passes) — the dense
-    # graph already collapses in the alternation's FIRST round, so the
-    # contraction only adds one round of fixed job overhead. It remains
-    # the right switch when the closure is volume-bound rather than
-    # job-floor-bound (see the operator's docstring).
     rep_comps = connected_components(
         pair_fn(reps, threshold), "doc1", "doc2", assume_distinct=True
     )
@@ -1043,11 +1034,6 @@ def dedup_components(
         # table round-trips `bottomk_sketch_pairs`' distinct output (and
         # duplicates could at worst delay convergence detection one
         # round, never change the fixpoint — see connected_components)
-        # r17 measured: pre_contract=True on this seam cuts the closure's
-        # edge volume 83x (252,823 -> 3,053) but LOSES ~0.3s at gate scale
-        # (interleaved A/B best 1.71 vs 2.01s) — the closure here is
-        # job-floor-bound, not volume-bound; left at the measured-fastest
-        # shape (see OPTIMIZATION_r17.md)
         comps = connected_components(pairs, "doc1", "doc2", assume_distinct=True)
     return comps.select(F.col("node").alias("doc_id"), "component")
 
@@ -1096,11 +1082,6 @@ def dedup_neardup_handoff(
         )
     else:
         # seam arm: saved pair tables round-trip the distinct output
-        # r17 measured: pre_contract=True on this seam cuts the closure's
-        # edge volume 83x (252,823 -> 3,053) but LOSES ~0.3s at gate scale
-        # (interleaved A/B best 1.71 vs 2.01s) — the closure here is
-        # job-floor-bound, not volume-bound; left at the measured-fastest
-        # shape (see OPTIMIZATION_r17.md)
         comps = connected_components(pairs, "doc1", "doc2", assume_distinct=True)
     return comps.select(F.col("node").alias("doc_id"), "component")
 
@@ -1154,8 +1135,6 @@ def dedup_survivors(
             )
         else:
             # seam arm: saved pair tables round-trip the distinct output
-            # r17: pre_contract measured SLOWER here (job-floor-bound closure;
-            # see dedup_components' seam note) — left at the fastest shape
             comps = connected_components(
                 pairs, "doc1", "doc2", assume_distinct=True
             )

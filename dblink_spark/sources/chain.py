@@ -76,10 +76,13 @@ class BufferedChainWriter:
             if overwrite and os.path.isdir(self.path):
                 shutil.rmtree(self.path)
             os.makedirs(self.path, exist_ok=True)
-            pq.write_table(
-                pa.concat_tables(arrow),
-                os.path.join(self.path, f"part-local-{uuid.uuid4().hex}.parquet"),
-            )
+            # written under a hidden name (the scan skips a leading "."),
+            # then renamed into place: a run killed mid-write leaves no
+            # torn part for the scan to read
+            name = f"part-local-{uuid.uuid4().hex}.parquet"
+            tmp = os.path.join(self.path, "." + name)
+            pq.write_table(pa.concat_tables(arrow), tmp)
+            os.replace(tmp, os.path.join(self.path, name))
             self._wrote = True
         if dfs:
             df = dfs[0]

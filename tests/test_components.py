@@ -83,86 +83,6 @@ def test_matches_bruteforce_random_graph(spark):
     assert _cc(spark, pairs) == truth
 
 
-def test_min_neighbor_contraction_exact_closure(spark):
-    """r17: `min_neighbor_contraction` must preserve the transitive
-    closure, the node set, and the per-component minima EXACTLY — checked
-    against union-find ground truth on the topology class that kills the
-    naive star-only emit (the 4-node counterexample) plus random graphs."""
-    import random
-
-    from dblink_spark.operators.components import min_neighbor_contraction
-
-    def closure_of(pairs):
-        touched = {n for ab in pairs for n in ab}
-        parent = {n: n for n in touched}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in touched}
-
-    def contracted_then_closed(pairs):
-        df = spark.createDataFrame(pairs, "u bigint, v bigint").distinct()
-        df = df.localCheckpoint(eager=True)  # helper contract: materialized
-        e2 = min_neighbor_contraction(df)
-        rows = [(r["u"], r["v"]) for r in e2.collect()]
-        # contracted set must be a SUBSET of the original connectivity
-        # (no new cross-component edge) and close to the same components
-        assert closure_of(rows) == closure_of(pairs)
-        return rows
-
-    # the 4-node counterexample: star-only emission splits {1,2,3,4};
-    # the rewritten edges must keep it whole
-    contracted_then_closed([(1, 3), (2, 4), (3, 4)])
-    # clique + chain + isolated pair
-    clique = [(a, b) for a in range(5) for b in range(5) if a < b]
-    chain = [(i, i + 1) for i in range(20, 30)]
-    contracted_then_closed(clique + chain + [(50, 51)])
-    # random graphs, several seeds
-    for seed in (3, 17, 41):
-        rnd = random.Random(seed)
-        nodes = list(range(80))
-        pairs = [(rnd.choice(nodes), rnd.choice(nodes)) for _ in range(70)]
-        pairs = sorted({(a, b) for a, b in pairs if a != b})
-        rows = contracted_then_closed(pairs)
-        # density check: a clique-heavy random graph must not GROW
-        assert len(rows) <= 2 * len(pairs)
-
-
-def test_pre_contract_parity(spark):
-    """r17: ``pre_contract=True`` must return the identical closure as
-    the plain alternation on every topology (it is one exact contraction
-    round, not an approximation)."""
-    import random
-
-    def run(pairs, pre):
-        df = spark.createDataFrame(pairs, "v1 bigint, v2 bigint")
-        return {
-            r["node"]: r["component"]
-            for r in connected_components(df, pre_contract=pre).collect()
-        }
-
-    topologies = [
-        [(1, 3), (2, 4), (3, 4)],  # the star-only counterexample
-        [(i, i + 1) for i in range(31)],  # chain
-        [(a, b) for a in range(6) for b in range(6) if a < b],  # clique
-        [(100, x) for x in (101, 102, 103)] + [(103, 7), (7, 8), (8, 9)],
-    ]
-    rnd = random.Random(7)
-    nodes = list(range(150))
-    rand_pairs = [(rnd.choice(nodes), rnd.choice(nodes)) for _ in range(110)]
-    topologies.append([(a, b) for a, b in rand_pairs if a != b])
-    for pairs in topologies:
-        assert run(pairs, True) == run(pairs, False)
-
-
 def test_assume_distinct_parity(spark):
     """r16: ``assume_distinct=True`` (skips the initial canonicalizing
     exchange) must return the identical closure on distinct input — and,

@@ -9,6 +9,8 @@ actually links distorted duplicates (F1 beats the trivial baselines).
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -245,13 +247,17 @@ def test_kernel_row_order_independence(spark, rl_setup):
     (shuffle fetch order is not guaranteed across retries/AQE): a random
     permutation of entities AND records must produce a bit-identical chain,
     because run_fused_sweeps canonicalizes on entry."""
+    import pyarrow.compute as pc
+
     from dblink_spark.er.model import PartitionState
-    from dblink_spark.er.state import _pdf_to_partition_state, run_fused_sweeps
+    from dblink_spark.er.state import _pa_to_partition_state, run_fused_sweeps
 
     records, attrs, cache, pdf = rl_setup
     state = init_state(spark, records, cache, SinglePartition(), 1, seed=7)
-    sdf = state.df.toPandas()
-    ps = _pdf_to_partition_state(sdf[~sdf["is_summary"]], cache.num_attributes)
+    tbl = state.df.toArrow()
+    ps = _pa_to_partition_state(
+        tbl.filter(pc.invert(tbl.column("is_summary"))), cache.num_attributes
+    )
 
     prng = np.random.default_rng(0)
     eperm = prng.permutation(ps.num_entities)
@@ -277,7 +283,7 @@ def test_kernel_row_order_independence(spark, rl_setup):
 
 def test_local_vs_spark_multi_partition(spark, rl_setup):
     """transition_local must produce the SAME chain as the Spark
-    applyInPandas transition on a 2-partition KD-tree state: kernels
+    transition on a 2-partition KD-tree state: kernels
     canonicalize on entry, seeds are data-keyed, and migration follows the
     same partition function — so cluster content, θ, log-likelihood (2
     terms: IEEE-commutative), and distortion counts match exactly."""
@@ -324,20 +330,20 @@ def test_local_vs_spark_multi_partition(spark, rl_setup):
 
 
 def test_fused_local_vs_spark_bit_parity(spark, rl_setup):
-    """transition_fused(local=True) must produce the SAME chain as the
-    applyInPandas execution (local=False): both run run_fused_sweeps with
-    identical seeds, so linkage structure, θ, log-likelihood, and distortion
-    counts are bit-identical. Guards the driver-local fast path against
-    drifting from the distributed kernel."""
-    from dblink_spark.er.state import transition_fused
+    """transition_local(n_sweeps=k) must produce the SAME chain as
+    transition(n_sweeps=k) on Spark at p=1: both run run_fused_sweeps with
+    identical seeds and θ redraws, so linkage structure, θ,
+    log-likelihood, and distortion counts are bit-identical. Guards the
+    driver-local fast path against drifting from the distributed kernel."""
+    from dblink_spark.er.state import transition_local
 
     records, attrs, cache, pdf = rl_setup
     s_loc = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
     s_spk = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
-    s_loc = transition_fused(s_loc, "PCG-I", 4, local=True)
-    s_loc = transition_fused(s_loc, "PCG-I", 3, local=True)  # local→local continuation
-    s_spk = transition_fused(s_spk, "PCG-I", 4, local=False)
-    s_spk = transition_fused(s_spk, "PCG-I", 3, local=False)
+    s_loc = transition_local(s_loc, "PCG-I", n_sweeps=4)
+    s_loc = transition_local(s_loc, "PCG-I", n_sweeps=3)  # local→local continuation
+    s_spk = transition(s_spk, "PCG-I", n_sweeps=4)
+    s_spk = transition(s_spk, "PCG-I", n_sweeps=3)
 
     assert s_loc.iteration == s_spk.iteration == 7
     assert s_loc.current_seed == s_spk.current_seed
@@ -496,53 +502,83 @@ def test_salt_expr_cache_keyed_by_live_context(spark):
     assert buckets == 4
 
 
-def test_multisweep_k1_bit_parity_with_transition(spark, rl_setup):
-    """r14 (VERDICT task 3): transition_multisweep(k=1) must be
-    BIT-IDENTICAL to transition() on a 2-partition chain — same θ RNG
-    cadence, same kernel seeds, same migration — so the fused variant's
-    only differences are the documented k>1 relaxations."""
-    from dblink_spark.er.state import assign_partitions, transition_multisweep
+def _chain_hash(state) -> str:
+    """Hash of θ, the summary, the iteration and seed, and the sorted
+    cluster rows (partition, entity values, linked records)."""
+    h = hashlib.sha256()
+    h.update(np.asarray(state.theta, np.float64).tobytes())
+    s = state.summary
+    h.update(
+        repr(
+            (state.iteration, state.current_seed, s.log_likelihood, s.num_isolates)
+        ).encode()
+    )
+    h.update(s.agg_distortions.astype(np.int64).tobytes())
+    h.update(s.rec_distortions.astype(np.int64).tobytes())
+    rows = state.df.filter("NOT is_summary").collect()
+    for row in sorted(
+        (r["partition_id"], list(r["ent_values"]), sorted(r["rec_ids"]))
+        for r in rows
+    ):
+        h.update(repr(row).encode())
+    return h.hexdigest()[:16]
 
+
+def _two_partitions(spark, records, cache, seed):
+    st = init_state(spark, records, cache, SinglePartition(), 1, seed=seed)
+    part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
+    part.fit(st.df.filter("NOT is_summary").select("ent_values"))
+    return assign_partitions(st, part, 2)
+
+
+def _driver_p1_4_3(spark, records, cache):
+    from dblink_spark.er.state import transition_local
+
+    s = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
+    s = transition_local(s, "PCG-I", n_sweeps=4)
+    return transition_local(s, "PCG-I", n_sweeps=3)
+
+
+def _spark_p2_3x_k1(spark, records, cache):
+    s = _two_partitions(spark, records, cache, 17)
+    for _ in range(3):
+        s = transition(s, "PCG-I")
+    return s
+
+
+def _spark_p2_2x_k3(spark, records, cache):
+    s = _two_partitions(spark, records, cache, 29)
+    for _ in range(2):
+        s = transition(s, "PCG-I", n_sweeps=3)
+    return s
+
+
+@pytest.mark.parametrize(
+    "chain,expected",
+    [
+        (_driver_p1_4_3, "3dac0fb8e662f337"),
+        (_spark_p2_3x_k1, "ea96ed57333e089f"),
+        (_spark_p2_2x_k3, "2dccfa60e0260b9d"),
+    ],
+    ids=["driver_p1_4_3", "spark_p2_3x_k1", "spark_p2_2x_k3"],
+)
+def test_chain_pinned(spark, rl_setup, chain, expected):
+    """Chains on each executor, pinned bit for bit: a p=1 chain on the
+    driver fused as 4 + 3 sweeps (θ redrawn between sweeps), a p=2 Spark
+    chain of three one-sweep transitions (the reference cadence), and a
+    p=2 Spark chain of two 3-sweep transitions (θ and migration every 3
+    sweeps). The pins were computed before the transition entry points
+    were merged into `transition` and `transition_local`."""
     records, attrs, cache, pdf = rl_setup
-
-    def mk():
-        st = init_state(spark, records, cache, SinglePartition(), 1, seed=17)
-        part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
-        part.fit(st.df.filter("NOT is_summary").select("ent_values"))
-        return assign_partitions(st, part, 2)
-
-    s_one, s_multi = mk(), mk()
-    for _ in range(3):
-        s_one = transition(s_one, "PCG-I")
-    for _ in range(3):
-        s_multi = transition_multisweep(s_multi, "PCG-I", 1)
-
-    assert s_multi.iteration == s_one.iteration == 3
-    assert s_multi.current_seed == s_one.current_seed
-    assert (s_multi.theta == s_one.theta).all()
-    assert s_multi.summary.log_likelihood == s_one.summary.log_likelihood
-    assert (
-        s_multi.summary.agg_distortions == s_one.summary.agg_distortions
-    ).all()
-
-    def links(st):
-        rows = st.df.filter("NOT is_summary").collect()
-        return sorted(
-            (r["partition_id"], r["ent_values"], sorted(r["rec_ids"]))
-            for r in rows
-        )
-
-    assert links(s_multi) == links(s_one)
+    assert _chain_hash(chain(spark, records, cache)) == expected
 
 
 def test_multisweep_k3_invariants_and_determinism(spark, rl_setup):
     """k=3 on 2 partitions: population conserved, records partition
     across clusters, iteration/seed advance by k, chains deterministic
     (two identically-seeded runs agree bit-exactly), and the consumed-
-    state rule applies to the multisweep path too."""
-    from dblink_spark.er.state import (
-        StateConsumedError, assign_partitions, transition_multisweep,
-    )
+    state rule applies to fused transitions too."""
+    from dblink_spark.er.state import StateConsumedError, assign_partitions
 
     records, attrs, cache, pdf = rl_setup
 
@@ -555,7 +591,7 @@ def test_multisweep_k3_invariants_and_determinism(spark, rl_setup):
     def run():
         s = mk()
         for _ in range(2):
-            s = transition_multisweep(s, "PCG-I", 3)
+            s = transition(s, "PCG-I", n_sweeps=3)
         return s
 
     a, b = run(), run()
@@ -573,9 +609,9 @@ def test_multisweep_k3_invariants_and_determinism(spark, rl_setup):
     assert links(a) == links(b), "multisweep chain must be deterministic"
     assert a.summary.log_likelihood == b.summary.log_likelihood
 
-    mid = transition_multisweep(a, "PCG-I", 2)  # consumes a
+    mid = transition(a, "PCG-I", n_sweeps=2)  # consumes a
     with pytest.raises(StateConsumedError):
-        transition_multisweep(a, "PCG-I", 1)
+        transition(a, "PCG-I", n_sweeps=1)
     _check_invariants(mid, len(pdf), len(pdf))
 
 

@@ -169,8 +169,8 @@ class TestProjectPipeline:
         """r15 (VERDICT r14 task 7): the multisweep knobs are a documented
         CONFIG surface, not just SamplerOptions fields — a HOCON config
         setting `multisweepK` / `multisweepBurninK` / `localExecMaxRecords`
-        on the sample step must route the chain through
-        `transition_multisweep` with the configured fusion widths, land
+        on the sample step must route the chain through `transition`
+        with the configured fusion widths (`n_sweeps`), land
         the exact save points, and produce an evaluable chain. (README
         'Beyond-reference sampler knobs' documents exactly this config.)"""
         from dblink_spark.er import sampler as sampler_mod
@@ -215,13 +215,13 @@ dblink {{
 """
         )
         fused_widths: list[int] = []
-        real = sampler_mod.transition_multisweep
+        real = sampler_mod.transition
 
-        def counting(state, mode, n_sweeps, **kw):
+        def counting(state, mode, phase_sink=None, n_sweeps=1):
             fused_widths.append(n_sweeps)
-            return real(state, mode, n_sweeps, **kw)
+            return real(state, mode, phase_sink, n_sweeps)
 
-        monkeypatch.setattr(sampler_mod, "transition_multisweep", counting)
+        monkeypatch.setattr(sampler_mod, "transition", counting)
         project = Project.from_config_file(spark, str(conf))
         results = project.run()
         # burnin 4 fused at k=4 (one job), then thin-2 saves at 6 and 8

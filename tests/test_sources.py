@@ -81,6 +81,42 @@ def test_buffered_chain_writer(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(iteration), GreaterThanOrEqual(iteration,3)" in plan
 
 
+def test_chain_flush_is_crash_safe(spark, tmp_path, monkeypatch):
+    """A flush that dies while writing its part file leaves the chain as
+    the earlier flushes wrote it: the part is written under a hidden name
+    and renamed into place only once complete."""
+    import pyarrow.parquet as pq
+
+    def sample(it):
+        return pa.table(
+            {
+                "iteration": pa.array([it], pa.int64()),
+                "partition_id": pa.array([0], pa.int32()),
+                "rec_ids": pa.array([["a", "b"]], pa.list_(pa.string())),
+            }
+        )
+
+    w = BufferedChainWriter(str(tmp_path), buffer_size=2)
+    for it in range(4):
+        w.append(sample(it))  # two complete flushes
+    real = pq.write_table
+
+    def torn(table, where, **kw):
+        real(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(os.path.getsize(where) // 2)
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(pq, "write_table", torn)
+    w.append(sample(4))
+    with pytest.raises(OSError, match="killed mid-write"):
+        w.append(sample(5))
+    its = sorted(
+        r["iteration"] for r in read_linkage_chain(spark, str(tmp_path)).collect()
+    )
+    assert its == [0, 1, 2, 3]
+
+
 def test_copy_files(spark, tmp_path):
     src = tmp_path / "a.txt"
     src.write_text("hello")
