@@ -67,6 +67,7 @@ from dblink_spark.operators.workerboot import make_worker_boot
 from dblink_spark.er.model import (
     PartitionState,
     canonicalize_partition_state,
+    concat_partition_states,
     partition_summary,
     split_partition_state,
     transition_partition,
@@ -1100,8 +1101,6 @@ def transition_local(state: State, mode: str, n_sweeps: int = 1) -> State:
     if parts is None:
         parts = _df_to_local_parts(state.df, num_attrs)
     P = state.num_partitions
-
-    from dblink_spark.er.model import concat_partition_states
 
     swept: dict[int, PartitionState] = {}
     for pid in sorted(parts):
