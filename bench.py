@@ -1,12 +1,14 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line on stdout.
+"""Query-inventory benchmark: runs the headline queries on the sf0.1
+fixtures (or the directory in $SPARK_GRAFT_SF_DIR) and prints ONE JSON line
+on stdout. The ER pipeline has its own benchmark, erbench
+(``BENCHMARK.json``, ``erbench/run.py``).
 
 OUTPUT CONTRACT (r7): the driver captures only the LAST ~2000 characters of
 stdout — r6's single line outgrew that window and the committed artifact
 lost its own headline number (BENCH_r06.json: "parsed": null). So stdout is
-now a COMPACT payload (headline per-query dict + totals + the ER probe
-medians, guarded to stay under the capture window), and the FULL payload
-(every timed query, notes, regressions, per-window probe rates) is written
+now a COMPACT payload (headline per-query dict + totals + the probe
+timings, guarded to stay under the capture window), and the FULL payload
+(every timed query, notes, regressions) is written
 to BENCH_FULL_LATEST.json next to this file. tools/bench_diff.py follows
 the compact payload's "full" pointer automatically.
 
@@ -16,18 +18,12 @@ first runs pay one-off JVM/codegen costs that a long-lived cluster amortizes
 Timing forces full materialization via a count on a cheap projection
 (df.toPandas would add driver transfer that a real pipeline writes to
 parquet instead).
-
-ER probes report the MEDIAN of 3 independent timing windows plus the
-min..max spread (r7: committed r6 probe numbers were 30-40% below an
-isolated re-run — sweep contamination; a single window cannot be trusted
-to ±30% on local[32], see COVERAGE.md).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -344,9 +340,6 @@ def main() -> None:
         "r7: stdout is the COMPACT payload (driver tail capture is ~2000 "
         "chars; r6's full line overflowed it and lost the headline) — the "
         "full payload incl. every timed query lives in BENCH_FULL_LATEST.json",
-        "r7: ER probes report median-of-3 independent windows + min..max "
-        "spread (committed r6 single-window numbers were 30-40% below an "
-        "isolated re-run; COVERAGE.md documents the ±30% variance)",
         "r8: constant-work canary timed at sweep start and end "
         "(canary_start_sec / canary_end_sec) — the r7 judge measured 2.2x "
         "same-code host drift between sessions; read cross-round absolutes "
@@ -371,41 +364,9 @@ def main() -> None:
         "plan re-read this round, no redundant exchange to recover",
     ]
     try:
-        med, spread, windows = mcmc_iters_per_sec(spark)
-        out["er_mcmc_iters_per_sec"] = med
-        out["er_mcmc_spread"] = spread
-        out["er_mcmc_window_rates"] = windows
-        out["er_mcmc_probe_iters"] = mcmc_iters_per_sec.last_window_iters
-        # statistic marker alongside the window length: bench_diff only
-        # compares rates measured under the same (window, statistic) pair
-        # (ADVICE r7 — r6's best-of-2 vs r7's median-of-3 shared iters=200
-        # and would otherwise diff as same-methodology). r14: equilibrium
-        # methodology (600-sweep pre-advance) — pre-r14 medians sampled
-        # the fresh-chain transient and read ~30-50% higher; not
-        # comparable, hence the new marker.
-        out["er_mcmc_probe_stat"] = "median3_equilibrium_r14"
-    except Exception as e:  # never let the ER probe break the contract line
-        print(f"# er bench skipped: {e}", file=sys.stderr)
-    try:
-        out.update(paper_scale_spark_path(spark))
-    except Exception as e:
-        print(f"# paper-scale bench skipped: {e}", file=sys.stderr)
-    try:
-        out.update(paper_scale_multisweep(spark))
-    except Exception as e:
-        print(f"# paper-scale multisweep probe skipped: {e}", file=sys.stderr)
-    try:
-        out.update(er_iteration_floor_breakdown(spark))
-    except Exception as e:
-        print(f"# iter-floor breakdown skipped: {e}", file=sys.stderr)
-    try:
         out.update(pair_table_amortization(spark, sf_dir))
     except Exception as e:
         print(f"# pair-table amortization probe skipped: {e}", file=sys.stderr)
-    try:
-        out.update(er_1m_partition_scaling(spark))
-    except Exception as e:
-        print(f"# 1M-chain bench skipped: {e}", file=sys.stderr)
     try:
         out.update(streaming_pipeline_probe(spark, sf_dir))
     except Exception as e:
@@ -542,46 +503,9 @@ def _compact(out: dict, timings: dict[str, float]) -> dict:
         if k in out:
             compact[k] = out[k]
     for k in (
-        "er_mcmc_iters_per_sec",
-        "er_mcmc_probe_iters",
-        "er_mcmc_probe_stat",
-        "er_mcmc_spread",
-        "er_paper_spark_1part_iters_per_sec",
-        "er_paper_spark_4part_iters_per_sec",
-        "er_paper_spark_8part_iters_per_sec",
-        "er_paper_spark_16part_iters_per_sec",
-        "er_paper_spark_1part_spread",
-        "er_paper_spark_4part_spread",
-        "er_paper_spark_16part_spread",
-        # r16: burn-in fusion at paper scale (VERDICT r15 task 8) — the
-        # job-floor-bound regime's k recommendation, within-session
-        "er_paper_multisweep8p_k8_speedup_vs_k1",
-        "er_paper_multisweep16p_k8_speedup_vs_k1",
         "pairtable_build_save_sec",
         "pairtable_consumers_total_sec",
         "compstable_consumers_total_sec",
-        "er_iterfloor_plan_sec",
-        "er_iterfloor_job_sec",
-        "er_iterfloor_python_job_floor_sec",
-        "er_iterfloor_jvm_job_floor_sec",
-        "er_1m_8part_sec_per_iter",
-        "er_1m_16part_sec_per_iter",
-        "er_1m_32part_sec_per_iter",
-        "er_1m_8part_sec_per_iter_norm",
-        "er_1m_16part_sec_per_iter_norm",
-        "er_1m_32part_sec_per_iter_norm",
-        "er_1m_max_partition_clusters",
-        "er_1m_8part_max_partition_clusters",
-        "er_1m_16part_max_partition_clusters",
-        "er_1m_32part_max_partition_clusters",
-        # r15: 1M sweep fusion — the within-session ratios are the signal
-        "er_1m_multisweep8p_k1_sec_per_iter",
-        "er_1m_multisweep8p_k8_sec_per_iter",
-        # r17 (VERDICT r16 task 8): the k-speedup ratio cells left the
-        # compact artifact — chain-state drift dominates them (r16
-        # 3-cycle re-measure), so a per-round ratio straddling 1.0 reads
-        # as a regression signal it is not; the absolutes + the
-        # non-comparative marker stay in the full payload
         # r17 (VERDICT r16 task 6): the streaming family's bench surface
         "streaming_sessionize_sec",
         "streaming_neardup_sec",
@@ -591,41 +515,12 @@ def _compact(out: dict, timings: dict[str, float]) -> dict:
     # drop priority: first entry goes first (ADVICE r7: .pop() from the end
     # made the actual order the reverse of the documented one)
     droppable = [
-        # r15: the key set outgrew the budget and the per-query dict was
-        # sacrificed (the one thing the compact line exists to carry) —
-        # redundant/derivable probe keys now drop first: legacy dup,
-        # per-point balance (full file), ARIs that equal their F1 twin
-        # every round, interior k points (endpoints tell the story)
-        "er_1m_max_partition_clusters",
-        "er_1m_16part_max_partition_clusters",
-        "er_1m_32part_max_partition_clusters",
-        "er_1m_8part_max_partition_clusters",
-        # the 16p fusion point is the secondary arm of the paper-scale
-        # probe (8p is the headline)
-        "er_paper_multisweep16p_k8_speedup_vs_k1",
-        "er_1m_multisweep8p_k4_speedup_vs_k1",
-        "er_1m_multisweep8p_k8_sec_per_iter",
-        # r17: the streaming probe's trend lives in the full payload; its
-        # compact copies drop ahead of the ER scaling medians
+        # r17: the streaming probe's trend lives in the full payload
         "streaming_neardup_sec",
         "streaming_sessionize_sec",
-        "er_mcmc_probe_iters",
         "compstable_consumers_total_sec",
-        "er_1m_8part_sec_per_iter_norm",
-        "er_1m_16part_sec_per_iter_norm",
-        "er_1m_32part_sec_per_iter_norm",
         "pairtable_build_save_sec",
         "pairtable_consumers_total_sec",
-        "er_iterfloor_jvm_job_floor_sec",
-        "er_iterfloor_python_job_floor_sec",
-        "er_mcmc_spread",
-        "er_paper_spark_1part_spread",
-        "er_paper_spark_16part_spread",
-        "er_paper_spark_1part_iters_per_sec",
-        "er_paper_spark_8part_iters_per_sec",
-        # the 4-part spread drops LAST among probe extras: it adjudicates
-        # the headline scaling endpoint
-        "er_paper_spark_4part_spread",
     ]
     while len(json.dumps(compact)) > COMPACT_LINE_BUDGET and droppable:
         compact.pop(droppable.pop(0), None)
@@ -659,17 +554,6 @@ def _time_query(spark, sf_dir: str, name: str, reps: int = 3):
             dt = time.time() - t0
         best = dt if best is None else min(best, dt)
     return round(best, 3), n
-
-
-def _median_windows(run_window, n_windows: int = 3):
-    """Run ``run_window() -> rate`` n times; return (median, "min..max",
-    [rates]). The committed artifact must reproduce within ~15% on an
-    isolated re-run (VERDICT r6 task 2) — a single window cannot promise
-    that on local[32]."""
-    rates = [run_window() for _ in range(n_windows)]
-    med = statistics.median(rates)
-    spread = f"{min(rates):.3g}..{max(rates):.3g}"
-    return round(med, 3), spread, [round(r, 3) for r in rates]
 
 
 def _payload_history() -> list[tuple[int, dict, str]]:
@@ -806,158 +690,6 @@ def _diff_vs_last_round(out: dict, spark=None, sf_dir: str | None = None) -> Non
         print(f"# bench diff skipped: {e}", file=sys.stderr)
 
 
-def _make_er_problem(spark, n_records: int, seed: int, dup_fraction: float = 0.2):
-    """Shared probe scaffolding: RLdata-shaped synthetic -> records frame +
-    attribute spec + records cache (the same 5-attribute schema every ER
-    probe uses)."""
-    from pyspark.sql import functions as F
-
-    from dblink_spark.er.attributes import (
-        Attribute,
-        BetaParams,
-        ConstantSim,
-        LevenshteinSim,
-    )
-    from dblink_spark.er.cache import build_records_cache
-    from dblink_spark.er.datagen import make_rldata
-
-    pdf = make_rldata(
-        n_records=n_records, dup_fraction=dup_fraction,
-        missing_fraction=0.02, seed=seed,
-    )
-    if "ent_id" in pdf.columns:
-        pdf = pdf.drop(columns=["ent_id"])
-    records = (
-        spark.createDataFrame(pdf).withColumn("file_id", F.lit("0")).repartition(32)
-    )
-    attrs = [
-        Attribute("by", ConstantSim(), BetaParams(0.5, 50.0)),
-        Attribute("bm", ConstantSim(), BetaParams(0.5, 50.0)),
-        Attribute("bd", ConstantSim(), BetaParams(0.5, 50.0)),
-        Attribute("fname", LevenshteinSim(7.0, 10.0), BetaParams(0.5, 50.0)),
-        Attribute("lname", LevenshteinSim(7.0, 10.0), BetaParams(0.5, 50.0)),
-    ]
-    cache = build_records_cache(records, attrs, expected_max_cluster_size=10)
-    return records, attrs, cache
-
-
-def paper_scale_spark_path(spark, n_records: int = 100_000, n_iters: int = 3) -> dict:
-    """Partition scaling of the distributed ``applyInPandas``/``applyInArrow``
-    path at a scale where kernels dominate the per-iteration job floor —
-    the regime the reference's near-linear-scaling headline claim is about
-    (ref: /root/reference README; multi-hundred-thousand-record datasets).
-
-    100k synthetic RLdata-shaped records, KD-tree partitioning, PCG-I;
-    median of 3 independent ``n_iters``-iteration windows per point (r7
-    variance fix). At 300k records the same harness measured 1/2/4/8
-    partitions at ~7.5/2.9/1.7/1.5 s/iter after the r5 floor work
-    (tools/measure_300k_scaling.py).
-
-    r15 (VERDICT r14 task 6): extended from p=1/4 to p=1/4/8/16 with a
-    per-point balance reading (``er_paper_{p}part_max_partition_clusters``)
-    so the near-linear-scaling story is pinned WITHIN-session at the
-    paper's own scale between rl10k and 1M — read the points as ratios
-    (the shared canary brackets the sweep), and read a stalling ratio
-    against the balance numbers: speedup flattens when max/mean partition
-    population diverges or the per-iteration job floor dominates the
-    shrinking per-partition kernels."""
-    from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import assign_partitions, init_state, transition
-
-    records, attrs, cache = _make_er_problem(spark, n_records, seed=11)
-    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=99)
-    out = {"er_paper_n_records": n_records}
-    for p in (1, 4, 8, 16):
-        if p == 1:
-            pf = SinglePartition()
-        else:
-            pf = KDTreePartitioner(
-                num_levels=p.bit_length() - 1, attribute_ids=[3, 4, 0]
-            )
-            pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-        s = assign_partitions(s0, pf, pf.num_partitions)
-        if p > 1:
-            sizes = [
-                r["count"]
-                for r in s.df.filter("NOT is_summary")
-                .groupBy("partition_id")
-                .count()
-                .collect()
-            ]
-            out[f"er_paper_{p}part_max_partition_clusters"] = int(max(sizes))
-            if p == 4:  # legacy key, kept so cross-round diffs line up
-                out["er_paper_max_partition_clusters"] = int(max(sizes))
-        s = transition(s, "PCG-I")  # warm
-        state_box = [s]
-
-        def _window() -> float:
-            t0 = time.time()
-            for _ in range(n_iters):
-                state_box[0] = transition(state_box[0], "PCG-I")
-            return n_iters / (time.time() - t0)
-
-        med, spread, rates = _median_windows(_window)
-        out[f"er_paper_spark_{p}part_iters_per_sec"] = med
-        out[f"er_paper_spark_{p}part_spread"] = spread
-        print(
-            f"# er_paper({n_records}): {med:.3f} it/s at {p} partition(s) "
-            f"(median of 3 windows, {spread})", file=sys.stderr,
-        )
-    return out
-
-
-def paper_scale_multisweep(spark, n_records: int = 100_000) -> dict:
-    """Burn-in sweep fusion at paper scale (VERDICT r15 task 8): the r15
-    p=16 flattening at 100k is JOB-FLOOR-bound — exactly the regime where
-    k=8 burn-in fusion wins at rl10k — so this probe measures k=1 vs k=8
-    at p=8/16 within one session to either extend the k-by-regime
-    recommendation down to 100k or bound it.
-
-    Methodology matches the 1M artifact (er-perf r15): every point runs
-    through ``transition(n_sweeps=k)`` (k=1 = same call path), and the two
-    k values are INTERLEAVED round-robin over 3 cycles with the median per
-    k — a sequential per-k pass conflates the chain's fresh→equilibrium
-    drift with the k effect. 16 sweeps per reading."""
-    from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import assign_partitions, init_state, transition
-
-    records, attrs, cache = _make_er_problem(spark, n_records, seed=11)
-    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=99)
-    out = {"er_paper_multisweep_n_records": n_records}
-    for p in (8, 16):
-        pf = KDTreePartitioner(
-            num_levels=p.bit_length() - 1, attribute_ids=[3, 4, 0]
-        )
-        pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-        s = assign_partitions(s0, pf, p)
-        s = transition(s, "PCG-I")  # warm this p
-        readings: dict[int, list[float]] = {1: [], 8: []}
-        for _cyc in range(3):
-            for k in (1, 8):
-                jobs = 16 // k
-                t0 = time.time()
-                for _ in range(jobs):
-                    s = transition(s, "PCG-I", n_sweeps=k)
-                readings[k].append((k * jobs) / (time.time() - t0))
-        k1 = statistics.median(readings[1])
-        k8 = statistics.median(readings[8])
-        out[f"er_paper_multisweep{p}p_k1_iters_per_sec"] = round(k1, 2)
-        out[f"er_paper_multisweep{p}p_k8_iters_per_sec"] = round(k8, 2)
-        out[f"er_paper_multisweep{p}p_k8_speedup_vs_k1"] = round(k8 / k1, 2)
-        out[f"er_paper_multisweep{p}p_k1_readings"] = [
-            round(x, 2) for x in readings[1]
-        ]
-        out[f"er_paper_multisweep{p}p_k8_readings"] = [
-            round(x, 2) for x in readings[8]
-        ]
-        print(
-            f"# er_paper_multisweep({n_records}): p={p} k=1 {k1:.2f} it/s, "
-            f"k=8 {k8:.2f} it/s ({k8 / k1:.2f}x; interleaved medians of 3)",
-            file=sys.stderr,
-        )
-    return out
-
-
 def pair_table_amortization(spark, sf_dir: str) -> dict:
     """VERDICT r12 task 2 / missing #1: MEASURE the shared-pairs seam.
 
@@ -1054,246 +786,6 @@ def pair_table_amortization(spark, sf_dir: str) -> dict:
     return out
 
 
-def er_iteration_floor_breakdown(spark) -> dict:
-    """VERDICT r12 task 1: decompose the distributed-ER per-iteration cost
-    into DRIVER PLAN (θ draw + salt column + kernel cloudpickle + lazy
-    localCheckpoint Catalyst planning) vs the ONE Spark JOB (scan →
-    shuffle → Python kernels → checkpoint materialization → summary
-    collect), alongside the two STRUCTURAL floors measured with the exact
-    same exec conf: a JVM-only two-stage job and a trivial
-    ``applyInPandas`` job (plan reused, identity kernel, 4 groups).
-
-    The structural story this makes adjudicable: before r13, a trivial
-    python job cost ~0.21s on this host because PySpark's worker loop
-    re-parses every sys.path zip's central directory on EVERY task
-    (``importlib.invalidate_caches`` → CPython 3.11's unguarded
-    ``zipimport``; ~140 ms of worker CPU per task, profiled). The
-    stat-guard backport (``operators/workerboot.py``) cuts the trivial
-    python job to ~0.09s, and the ER iteration's job phase rides the
-    same floor — the residual gap between ``job`` and
-    ``python_job_floor`` is Arrow serde + kernel compute + checkpoint
-    materialization, and the gap between plan and ~0 is Catalyst+py4j,
-    the same 1-job-per-iteration cadence the reference pays
-    (State.scala:78-99)."""
-    import statistics as _st
-
-    from pyspark.sql import functions as F
-
-    from dblink_spark.er import state as st
-    from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import assign_partitions, init_state, transition
-
-    records, attrs, cache = _make_er_problem(spark, 10_000, seed=11)
-    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=99)
-    pf = KDTreePartitioner(num_levels=2, attribute_ids=[3, 4, 0])
-    pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-    s = assign_partitions(s0, pf, pf.num_partitions)
-    s = transition(s, "PCG-I")
-    s = transition(s, "PCG-I")
-    plans, jobs = [], []
-    for _ in range(7):
-        sink: dict[str, float] = {}
-        s = transition(s, "PCG-I", phase_sink=sink)
-        plans.append(sink["plan"])
-        jobs.append(sink["job"])
-
-    # structural floors under the iteration's exact exec conf (width 4,
-    # AQE coalescing off); the python identity kernel applies the same
-    # workerboot guard the real kernels do, so this measures the floor
-    # the iteration actually rides
-    from dblink_spark.operators.workerboot import make_worker_boot
-
-    boot = make_worker_boot()
-
-    def _identity(pdf):
-        boot()
-        return pdf
-
-    out: dict = {}
-    with st._kernel_exec_conf(spark, shuffle_partitions=4):
-        df4 = spark.range(0, 4, 1, 4).withColumn("k", F.col("id") % 4)
-        jvm_plan = df4.groupBy("k").agg(F.count("*"))
-        py_plan = df4.groupBy("k").applyInPandas(_identity, "id long, k long")
-        for _ in range(3):  # warm pool workers through the boot guard
-            jvm_plan.collect()
-            py_plan.collect()
-
-        def _med(fn, n=7):
-            ts = []
-            for _ in range(n):
-                t0 = time.time()
-                fn()
-                ts.append(time.time() - t0)
-            return _st.median(ts)
-
-        out["er_iterfloor_jvm_job_floor_sec"] = round(
-            _med(lambda: jvm_plan.collect()), 3
-        )
-        out["er_iterfloor_python_job_floor_sec"] = round(
-            _med(lambda: py_plan.collect()), 3
-        )
-    out["er_iterfloor_plan_sec"] = round(_st.median(plans), 3)
-    out["er_iterfloor_job_sec"] = round(_st.median(jobs), 3)
-    out["er_iterfloor_plan_secs"] = [round(x, 3) for x in plans]
-    out["er_iterfloor_job_secs"] = [round(x, 3) for x in jobs]
-    out["er_iterfloor_note"] = (
-        "rl10k 4-part transition split driver-plan vs job; floors share "
-        "the exec conf; job ~ python_job_floor + serde/kernels/ckpt — "
-        "1 python job per iteration is the structural cadence "
-        "(workerboot.py halved the pre-r13 floor)"
-    )
-    print(
-        f"# er_iterfloor: plan {out['er_iterfloor_plan_sec']}s + job "
-        f"{out['er_iterfloor_job_sec']}s per iter; floors jvm "
-        f"{out['er_iterfloor_jvm_job_floor_sec']}s / python "
-        f"{out['er_iterfloor_python_job_floor_sec']}s", file=sys.stderr,
-    )
-    return out
-
-
-def er_1m_partition_scaling(spark, n_records: int = 1_000_000, n_iters: int = 6) -> dict:
-    """1M-record distributed chain at p=8 vs p=16 vs p=32 (VERDICT r6
-    task 7, extended to 32 parts per VERDICT r11 task 7: 13→9.7 s/iter at
-    8→16 suggested headroom). Reports the MEDIAN sec/iter per
-    point plus every iteration's own wall time (``..._iter_secs``) — the r7
-    judge measured 2.2x same-code host drift between sessions, so a single
-    committed number with no spread is unreadable (VERDICT r7 "what's
-    wrong" #2); the per-iteration times cost nothing, each iteration is
-    already driven individually. Also reports the max partition population —
-    the per-partition memory ceiling (SURVEY §4: "spill is not handled"; a
-    partition's packed state must fit one Arrow batch; see
-    ``er/state.py`` partition-budget guard). Read cross-round absolutes as
-    ratios against the canary probe, not as bare numbers."""
-    from dblink_spark.er.partition import KDTreePartitioner, SinglePartition
-    from dblink_spark.er.state import assign_partitions, init_state, transition
-
-    t0 = time.time()
-    records, attrs, cache = _make_er_problem(spark, n_records, seed=17)
-    build_s = time.time() - t0
-    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=31)
-    out = {
-        "er_1m_n_records": n_records,
-        "er_1m_cache_build_sec": round(build_s, 1),
-        # methodology marker (r13): median over SIX iterations (was 3) —
-        # cross-round diffs on these keys straddle that boundary
-        "er_1m_probe_stat": "median6_r13",
-    }
-    for p in (8, 16, 32):
-        pf = KDTreePartitioner(
-            num_levels=p.bit_length() - 1, attribute_ids=[3, 4, 0]
-        )
-        pf.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-        s = assign_partitions(s0, pf, pf.num_partitions)
-        # balance alongside every point (r11 task 7): the per-partition
-        # memory ceiling AND the straggler bound — speedup stalls when
-        # max/mean diverges, so the number must ride with the timing
-        sizes = [
-            r["count"]
-            for r in s.df.filter("NOT is_summary")
-            .groupBy("partition_id")
-            .count()
-            .collect()
-        ]
-        out[f"er_1m_{p}part_max_partition_clusters"] = int(max(sizes))
-        if p == 16:  # legacy key, kept so cross-round diffs line up
-            out["er_1m_max_partition_clusters"] = int(max(sizes))
-        s = transition(s, "PCG-I")  # warm
-        # Per-point host-load bracket (VERDICT r12 task 4 / "wrong" #3: two
-        # rounds of 16p medians inflated by host stalls needed hand
-        # adjudication): the SAME constant-work canary the sweep uses,
-        # timed immediately before each point's iterations, plus a
-        # canary-normalized median — a stalled slot now carries its own
-        # evidence (inflated canary => inflated median is load, not code).
-        point_canary = _canary(spark)
-        out[f"er_1m_{p}part_canary_sec"] = point_canary
-        iter_secs = []
-        for _ in range(n_iters):
-            t0 = time.time()
-            s = transition(s, "PCG-I")
-            iter_secs.append(round(time.time() - t0, 2))
-        # r13: SIX iterations per point (was 3) — two isolated clean-
-        # canary probes at 16p produced [9.4, 8.5, 9.2, 2.2, 2.2, 2.1]
-        # and [15.2, 5.4, 6.2, 22.5, 27.2, 28.3]: per-iteration times at
-        # 1M swing 3-5x within a single window with no stable phase
-        # structure, so a 3-sample median was adjudicating host weather.
-        # The median over 6 plus the per-point canary plus the full
-        # array is the honest committed shape. (The same probes DID
-        # nail something reproducible: retired checkpoints were leaking
-        # ~60 MB/iteration — fixed in er/state.py:_release_state_df,
-        # storage now flat at one live checkpoint.)
-        spi = statistics.median(iter_secs)
-        out[f"er_1m_{p}part_sec_per_iter"] = round(spi, 2)
-        out[f"er_1m_{p}part_sec_per_iter_norm"] = round(
-            spi * CANARY_REF_SEC / point_canary, 2
-        )
-        out[f"er_1m_{p}part_iter_secs"] = iter_secs
-        print(
-            f"# er_1m: {spi:.2f} s/iter at {p} partitions "
-            f"(median of {iter_secs}; point canary {point_canary:.2f}s, "
-            f"norm {out[f'er_1m_{p}part_sec_per_iter_norm']:.2f})",
-            file=sys.stderr,
-        )
-        if p == 8:
-            # r15 (VERDICT r14 task 1): multisweep where it matters — at
-            # 1M the per-job floor is noise next to the kernels, but
-            # fusing k sweeps per job ALSO amortizes the migration
-            # SHUFFLE (the state only exchanges at job boundaries), so
-            # the win has a different mechanism than rl10k's job-floor
-            # story. Same call path for every k (k=1 included, so the
-            # baseline shares the methodology), 8 sweeps per point,
-            # within-session ratios are the signal (absolutes are host
-            # weather; the per-point canary brackets them). The
-            # quality cost at this scale was measured out-of-band
-            # (equal-sweep-count k=1 vs k=8 chains, recorded in
-            # BENCH_1M_MULTISWEEP_r15.json) — too long for a per-round
-            # probe. The k points
-            # INTERLEAVE in two round-robin cycles and each k reports
-            # the median of its readings: a sequential one-shot-per-k
-            # sweep conflates the chain's own state drift (fresh chains
-            # sweep faster than mixed ones — the adjudicated
-            # equilibrium-transient effect) with the k effect.
-            ms = s  # reuse the warmed p=8 chain state
-            readings: dict[int, list[float]] = {k: [] for k in (1, 2, 4, 8)}
-            for _cyc in range(2):
-                for k in (1, 2, 4, 8):
-                    jobs = max(8 // k, 1)
-                    t0 = time.time()
-                    for _ in range(jobs):
-                        ms = transition(ms, "PCG-I", n_sweeps=k)
-                    readings[k].append((time.time() - t0) / (k * jobs))
-            k1_spi = statistics.median(readings[1])
-            for k in (1, 2, 4, 8):
-                spi_k = statistics.median(readings[k])
-                out[f"er_1m_multisweep8p_k{k}_sec_per_iter"] = round(spi_k, 2)
-                out[f"er_1m_multisweep8p_k{k}_iter_secs"] = [
-                    round(x, 2) for x in readings[k]
-                ]
-                if k > 1:
-                    out[f"er_1m_multisweep8p_k{k}_speedup_vs_k1"] = round(
-                        k1_spi / spi_k, 2
-                    )
-                print(
-                    f"# er_1m_multisweep: k={k} -> {spi_k:.2f} s/iter at 8 "
-                    f"partitions (median of {readings[k]}, interleaved "
-                    f"cycles)", file=sys.stderr,
-                )
-            # r17 (VERDICT r16 task 8, carrying r15 "wrong" #1): these
-            # cells are CHAIN-STATE-DRIFT dominated — the r16 3-cycle
-            # re-measure (BENCH_1M_MULTISWEEP_r16.json) found k=2/k=4
-            # statistically indistinguishable and k=8 straddling 1.0,
-            # with fresh-chain reads up to 5x faster than mixed-chain
-            # reads at the same k. Two in-bench cycles cannot support a
-            # cross-round ordering, so the payload says so in-band, and
-            # the speedup ratios no longer ride in the COMPACT artifact
-            # (the surface cross-round comparisons are made from).
-            out["er_1m_multisweep8p_note"] = (
-                "non-comparative across rounds: chain-state drift "
-                "dominates (see BENCH_1M_MULTISWEEP_r16.json); the "
-                "adjudicated claim lives in COVERAGE.md"
-            )
-    return out
-
-
 def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
     """r17 (VERDICT r16 task 6): the streaming family gets a bench
     surface. Two timed drains of the sf fixtures through the flagship
@@ -1312,6 +804,7 @@ def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
     round-over-round trend, which the streaming family previously had no
     measurement for. stream==batch parity stays pinned in
     tests/test_streaming*.py — this probe only times."""
+    import shutil
     import tempfile
 
     from dblink_spark.streaming.events import (
@@ -1321,60 +814,68 @@ def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
         sessionize_stream,
     )
 
+    # the stream reads the fixture's own schema, so a fixture change fails
+    # here loudly instead of diverging from a hard-coded copy
+    docs_schema = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).schema
     # the file stream source requires a DIRECTORY; the fixtures are single
     # read-only files, so stage each behind a symlink in a temp dir (the
     # local filesystem lists through symlinks; no bytes are copied)
     stage = tempfile.mkdtemp(prefix="bench_stream_src_")
-    for table in ("events", "documents"):
-        d = os.path.join(stage, table)
-        os.makedirs(d, exist_ok=True)
-        os.symlink(
-            os.path.join(sf_dir, f"{table}.parquet"),
-            os.path.join(d, "part-000.parquet"),
-        )
-
-    out = {}
-    best_sess = float("inf")
-    best_near = float("inf")
-    n_sess = n_near = 0
-    for rep in range(2):
-        spark.sparkContext.setJobDescription("bench: streaming sessionize")
-        table = f"bench_stream_sessions_{rep}"
-        t0 = time.monotonic()
-        run_to_memory_sink(
-            sessionize_stream(
-                read_event_stream(spark, os.path.join(stage, "events"))
-            ),
-            table,
-        )
-        best_sess = min(best_sess, time.monotonic() - t0)
-        n_sess = spark.table(table).count()
-        spark.catalog.dropTempView(table)
-
-        spark.sparkContext.setJobDescription("bench: streaming near-dedup")
-        docs = (
-            spark.readStream.schema(
-                "doc_id bigint, text string, lang string, source string, "
-                "n_chars bigint"
+    try:
+        for table in ("events", "documents"):
+            d = os.path.join(stage, table)
+            os.makedirs(d, exist_ok=True)
+            os.symlink(
+                os.path.join(sf_dir, f"{table}.parquet"),
+                os.path.join(d, "part-000.parquet"),
             )
-            .format("parquet")
-            .load(os.path.join(stage, "documents"))
-            # a synthetic-but-deterministic arrival time: the fixture has
-            # no timestamp column and the watermark operator needs one
-            .selectExpr(
-                "*", "timestamp_micros(doc_id * 1000000) AS event_time"
+
+        best_sess = float("inf")
+        best_near = float("inf")
+        n_sess = n_near = 0
+        for rep in range(2):
+            spark.sparkContext.setJobDescription("bench: streaming sessionize")
+            table = f"bench_stream_sessions_{rep}"
+            t0 = time.monotonic()
+            run_to_memory_sink(
+                sessionize_stream(
+                    read_event_stream(spark, os.path.join(stage, "events"))
+                ),
+                table,
             )
-        )
-        table = f"bench_stream_neardup_{rep}"
-        t0 = time.monotonic()
-        run_to_memory_sink(near_dedup_doc_stream_banded(docs), table)
-        best_near = min(best_near, time.monotonic() - t0)
-        n_near = spark.table(table).count()
-        spark.catalog.dropTempView(table)
-    spark.sparkContext.setJobDescription(None)
-    out["streaming_sessionize_sec"] = round(best_sess, 3)
-    out["streaming_neardup_sec"] = round(best_near, 3)
-    out["streaming_neardup_survivors"] = n_near
+            best_sess = min(best_sess, time.monotonic() - t0)
+            n_sess = spark.table(table).count()
+            spark.catalog.dropTempView(table)
+
+            spark.sparkContext.setJobDescription("bench: streaming near-dedup")
+            docs = (
+                spark.readStream.schema(docs_schema)
+                .format("parquet")
+                .load(os.path.join(stage, "documents"))
+                # a synthetic-but-deterministic arrival time: the fixture
+                # has no timestamp column and the watermark operator needs
+                # one
+                .selectExpr(
+                    "*", "timestamp_micros(doc_id * 1000000) AS event_time"
+                )
+            )
+            table = f"bench_stream_neardup_{rep}"
+            t0 = time.monotonic()
+            run_to_memory_sink(near_dedup_doc_stream_banded(docs), table)
+            best_near = min(best_near, time.monotonic() - t0)
+            n_near = spark.table(table).count()
+            spark.catalog.dropTempView(table)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+        # removes the symlinks, never the fixtures they point at
+        shutil.rmtree(stage, ignore_errors=True)
+    out = {
+        "streaming_sessionize_sec": round(best_sess, 3),
+        "streaming_neardup_sec": round(best_near, 3),
+        "streaming_neardup_survivors": n_near,
+    }
     print(
         f"# streaming probe: sessionize {best_sess:.2f}s ({n_sess} closed "
         f"sessions), banded near-dedup {best_near:.2f}s ({n_near} "
@@ -1382,57 +883,6 @@ def streaming_pipeline_probe(spark, sf_dir: str) -> dict:
         file=sys.stderr,
     )
     return out
-
-
-def mcmc_iters_per_sec(spark, n_records: int = 300, n_iters: int = 200):
-    """ER-engine throughput probe (BASELINE.md planned metric): PCG-I
-    transitions/sec on an RLdata-shaped synthetic, single partition.
-    No in-repo reference number exists (the reference publishes none), so
-    this is regression-tracked round over round.
-
-    Window: 200 fused iterations (>=1s — the r6 methodology; the old
-    10-iteration ~30ms window made r5's "regression" out of scheduler
-    jitter). r7: median of 3 windows + spread instead of best-of-2.
-    Returns (median_rate, spread, window_rates)."""
-    from dblink_spark.er.partition import SinglePartition
-    from dblink_spark.er.state import init_state, transition, transition_local
-
-    records, attrs, cache = _make_er_problem(spark, n_records, seed=7)
-    state = init_state(spark, records, cache, SinglePartition(), 1, seed=123)
-    state = transition(state, "PCG-I")  # warm (codegen + arrow setup)
-    reps = n_iters // 10 or 1
-    box = [state]
-
-    def _window() -> float:
-        t0 = time.time()
-        for _ in range(reps):
-            box[0] = transition_local(box[0], "PCG-I", n_sweeps=10)
-        return (10 * reps) / (time.time() - t0)
-
-    # discard one extra warmup window: the first fused sweep still pays
-    # Arrow/codegen setup (the old best-of-2 existed for the same reason)
-    _window()
-    # r14 (VERDICT r13 nit 2, adjudicated by an isolated decay probe):
-    # the in-artifact monotone window decay ([156.6, 128.3, 98.7] it/s in
-    # r13) was the chain's fresh->equilibrium TRANSIENT, not accumulation —
-    # isolated probes show RSS flat (+0.4 MB over 28 windows), canary
-    # flat, rates RECOVERING after dips, and a fresh chain sweeping
-    # ~30-50% faster than a mixed one (a mixed chain's candidate sets are
-    # genuinely bigger). Pre-advancing ~600 sweeps parks the chain at
-    # equilibrium so all three measured windows sample the same regime
-    # (isolated: [110, 102, 113, 107, 100, 94] post-advance, no trend).
-    for _ in range(600 // (10 * reps) or 1):
-        _window()
-    med, spread, rates = _median_windows(_window)
-    iters = 10 * reps
-    print(
-        f"# er_mcmc: {iters}-iter fused windows on {n_records} recs: "
-        f"median {med:.1f} it/s ({spread})", file=sys.stderr,
-    )
-    # exposed so main() can record the ACTUAL window in the payload —
-    # bench_diff only compares rates measured under the same window
-    mcmc_iters_per_sec.last_window_iters = iters
-    return med, spread, rates
 
 
 if __name__ == "__main__":

@@ -19,17 +19,6 @@ def _validate(weights: np.ndarray) -> None:
         raise ValueError("weights must be finite and non-negative")
 
 
-def sample_categorical(rng: np.random.Generator, weights: np.ndarray) -> int:
-    """One draw from an unnormalized weight vector (ref: DiscreteDist)."""
-    weights = np.asarray(weights, dtype=np.float64)
-    _validate(weights)
-    total = weights.sum()
-    if total <= 0:
-        raise ValueError("total weight must be positive")
-    cdf = np.cumsum(weights)
-    return int(np.searchsorted(cdf, rng.random() * total, side="right"))
-
-
 def sample_rows(rng: np.random.Generator, weight_matrix: np.ndarray) -> np.ndarray:
     """One categorical draw per row of an unnormalized (n, k) weight matrix.
 

@@ -33,9 +33,9 @@ from dblink_spark.er.state import (
 
 #: configs already warned about fusion being ignored on the driver-local
 #: path — keyed (multisweep_k, multisweep_burnin_k, n_records,
-#: local_exec_max_records) so the warning is one-time per configuration,
-#: not per sample() call (r15 ADVICE).
-_MS_IGNORED_WARNED: set[tuple[int, int, int, int]] = set()
+#: local_exec_max_records, single_partition) so the warning is one-time
+#: per configuration, not per sample() call (r15 ADVICE).
+_MS_IGNORED_WARNED: set[tuple[int, int, int, int, bool]] = set()
 
 
 @dataclass
@@ -204,11 +204,10 @@ def sample(
     )
     ms_warn_key = (
         opts.multisweep_k, opts.multisweep_burnin_k,
-        n_records, opts.local_exec_max_records,
+        n_records, opts.local_exec_max_records, state.num_partitions == 1,
     )
     if (
         on_driver
-        and state.num_partitions > 1
         and (opts.multisweep_k > 1 or opts.multisweep_burnin_k > 1)
         and ms_warn_key not in _MS_IGNORED_WARNED
     ):
@@ -221,14 +220,24 @@ def sample(
         # short sample() calls with the same config warn exactly once per
         # process (docs/README promise "one-time", not per-call).
         _MS_IGNORED_WARNED.add(ms_warn_key)
+        if state.num_partitions == 1:
+            # no cap routes a single partition to Spark, so there is no
+            # workaround to suggest
+            why = (
+                "a single-partition chain always runs driver-local and "
+                "already fuses every sweep up to the next save point"
+            )
+        else:
+            why = (
+                f"the chain ({n_records} records <= local_exec_max_records="
+                f"{opts.local_exec_max_records}) runs driver-local, which "
+                "has no per-job floor to amortize; set "
+                "local_exec_max_records=0 to force the distributed path if "
+                "fusion is wanted"
+            )
         logging.getLogger(__name__).warning(
-            "multisweep_k=%d/multisweep_burnin_k=%d ignored: the chain "
-            "(%d records <= local_exec_max_records=%d) runs driver-local, "
-            "which has no per-job floor to amortize; set "
-            "local_exec_max_records=0 to force the distributed path if "
-            "fusion is wanted",
-            opts.multisweep_k, opts.multisweep_burnin_k,
-            n_records, opts.local_exec_max_records,
+            "multisweep_k=%d/multisweep_burnin_k=%d ignored: %s",
+            opts.multisweep_k, opts.multisweep_burnin_k, why,
         )
     while saved < sample_size:
         it = state.iteration
@@ -276,11 +285,3 @@ def sample(
     if diag:
         diag.close()
     return state
-
-
-def read_linkage_chain(spark, output_path: str, cutoff: int | None = None) -> DataFrame:
-    """Read samples back (ref: LinkageChain.scala:35-43); delegates to
-    dblink_spark.sources.chain."""
-    from dblink_spark.sources.chain import read_linkage_chain as _read
-
-    return _read(spark, output_path, cutoff)

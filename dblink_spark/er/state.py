@@ -537,14 +537,7 @@ def _block_output_table(
     n_block_cols = 10  # cells emitted by _ps_to_block_cells
     arrays = []
     for idx, field in enumerate(_PA_BLOCK_SCHEMA):
-        if idx < n_block_cols:
-            vals = [r[idx] for r in rows]
-        elif field.name == "loglik":
-            vals = [None] * len(rows)
-        elif field.name == "n_isolates":
-            vals = [None] * len(rows)
-        else:
-            vals = [None] * len(rows)
+        vals = [r[idx] for r in rows] if idx < n_block_cols else [None] * len(rows)
         arrays.append(pa.array(vals, type=field.type))
     body = pa.Table.from_arrays(arrays, schema=_PA_BLOCK_SCHEMA)
     summ = pa.Table.from_arrays(

@@ -138,29 +138,6 @@ def test_rebased_baseline_does_not_waive_real_regression():
     assert len(regs) == 1 and regs[0].startswith("qa:")
 
 
-def test_er_probe_statistic_change_is_not_comparable():
-    """r8: best-of-2 (pre-r7, no spread key) vs median-of-3 (spread key or
-    explicit er_mcmc_probe_stat) must not diff as same-methodology even at
-    equal window length — medians sit below bests (ADVICE r7)."""
-    old = {"value": 1.0, "queries": {"q1": 1.0},
-           "er_mcmc_iters_per_sec": 140.0, "er_mcmc_probe_iters": 200}
-    new = {"value": 1.0, "queries": {"q1": 1.0},
-           "er_mcmc_iters_per_sec": 80.0, "er_mcmc_probe_iters": 200,
-           "er_mcmc_probe_stat": "median3", "er_mcmc_spread": "70..90"}
-    assert diff(old, new, 1.5) == []  # not comparable -> no regression
-
-
-def test_er_probe_same_statistic_still_gates():
-    old = {"value": 1.0, "queries": {"q1": 1.0},
-           "er_mcmc_iters_per_sec": 140.0, "er_mcmc_probe_iters": 200,
-           "er_mcmc_spread": "120..150"}
-    new = {"value": 1.0, "queries": {"q1": 1.0},
-           "er_mcmc_iters_per_sec": 80.0, "er_mcmc_probe_iters": 200,
-           "er_mcmc_spread": "70..90"}
-    regs = diff(old, new, 1.5)
-    assert any("er_mcmc" in r for r in regs)
-
-
 def test_canary_normalized_total_printed_and_not_gated(capsys):
     """r9: when both payloads carry value_canary_norm, the load-corrected
     total prints alongside the raw one; it informs, never gates."""
@@ -169,19 +146,6 @@ def test_canary_normalized_total_printed_and_not_gated(capsys):
     assert diff(old, new, 1.5) == []
     out = capsys.readouterr().out
     assert "canary-normalized" in out and "6.300" in out
-
-
-def test_quality_drop_gates_under_same_chain():
-    """r9: deterministic rl10k quality metrics gate on a >0.02 drop, but
-    only under the same methodology marker; improvements never gate."""
-    old = {"value": 1.0, "queries": {"q1": 1.0}, "er_rl10k_f1": 0.764,
-           "er_rl10k_ari": 0.764, "er_rl10k_quality_chain": "1000it"}
-    worse = dict(old, er_rl10k_f1=0.70)
-    better = dict(old, er_rl10k_f1=0.80)
-    other_chain = dict(worse, er_rl10k_quality_chain="500it")
-    assert any("er_rl10k_f1" in r for r in diff(old, worse, 1.5))
-    assert diff(old, better, 1.5) == []
-    assert diff(old, other_chain, 1.5) == []
 
 
 def test_rebase_pin_expires_after_post_rebase_payload(monkeypatch):

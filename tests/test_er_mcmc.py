@@ -142,6 +142,41 @@ def test_kdtree_partitioned_run(spark, rl_setup):
     assert pids == {0, 1}, f"expected both partitions populated, got {pids}"
 
 
+def test_simple_partitioner_and_lpt_schedule(spark, rl_setup):
+    """The reference's blocking partitioner (K6) and its LPT scheduler (K7)
+    have no config route, so this pins them directly. LPT on a hand-checked
+    weight vector: heaviest first, each value to the least-loaded bin
+    (ties to the lower bin), giving loads 5+3 = 4+3+1 = 8. Then a
+    SimplePartitioner fitted on a real state partitions it, and one
+    driver-local transition keeps every record in exactly one cluster and
+    every cluster in the partition its blocking value maps to."""
+    from dblink_spark.er.partition import SimplePartitioner, lpt_schedule
+    from dblink_spark.er.state import transition_local
+
+    assert lpt_schedule(
+        np.array([10, 20, 30, 40, 50]), np.array([5.0, 4.0, 3.0, 3.0, 1.0]), 2
+    ) == {10: 0, 20: 1, 30: 1, 40: 0, 50: 1}
+
+    records, attrs, cache, pdf = rl_setup
+    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=29)
+    part = SimplePartitioner(attr_id=0, n_partitions=2)
+    part.fit(s0.df.filter("NOT is_summary").select("ent_values"))
+    assert set(part.value_to_partition.values()) == {0, 1}
+
+    def pids_follow_blocking(st):
+        rows = st.df.filter("NOT is_summary").collect()
+        ents = np.array([r["ent_values"] for r in rows])
+        assert [r["partition_id"] for r in rows] == part(ents).tolist()
+        return {r["partition_id"] for r in rows}
+
+    st = assign_partitions(s0, part, part.num_partitions)
+    assert pids_follow_blocking(st) == {0, 1}
+    st = transition_local(st, "PCG-I")
+    assert st.iteration == 1
+    _check_invariants(st, len(pdf), len(pdf))
+    pids_follow_blocking(st)
+
+
 def test_assign_partitions_is_a_fork_not_an_advance(spark, rl_setup):
     """r13 regression: the storage-release that transition() now performs
     must NOT happen at the assign_partitions fork point — callers re-key
@@ -710,35 +745,46 @@ def test_sampler_multisweep_ignored_on_local_path_warns(
     """r15 (r14 ADVICE): the driver-local routing takes precedence over the
     multisweep branch — fusion only amortizes the distributed per-job
     floor, so ignoring it there is correct, but it must SAY so: a config
-    asking for multisweep_k>1 on a chain under local_exec_max_records gets
-    a ONE-TIME (per configuration, r15 ADVICE: once-guard, not per-call)
-    warning naming the workaround, and the chain content is
-    the plain local chain (the setting changed nothing)."""
+    asking for multisweep_k>1 on a driver-local chain gets a ONE-TIME (per
+    configuration, r15 ADVICE: once-guard, not per-call) warning, and the
+    chain content is the plain local chain (the setting changed nothing).
+    Checked at p = 1 and p = 2: a multi-partition chain under
+    local_exec_max_records is told the workaround; a single-partition
+    chain always runs driver-local, so its warning gives that reason and
+    suggests nothing."""
     import logging as _logging
 
     from dblink_spark.er import sampler as _sampler_mod
 
     records, attrs, cache, pdf = rl_setup
-    s0 = init_state(spark, records, cache, SinglePartition(), 1, seed=47)
-    part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
-    part.fit(s0.df.filter("NOT is_summary").select("ent_values"))
-    st = assign_partitions(s0, part, 2)
-    _sampler_mod._MS_IGNORED_WARNED.clear()  # isolate from suite ordering
     opts = SamplerOptions(
         sampler="PCG-I", burnin_interval=2, thinning_interval=1,
-        multisweep_k=4,  # ignored: default local cap routes local
+        multisweep_k=4,  # ignored: the chain runs driver-local
     )
-    with caplog.at_level(_logging.WARNING, logger="dblink_spark.er.sampler"):
-        st = sample(st, sample_size=2, options=opts)
-    assert st.iteration == 4  # burnin 2 + 2 kept at thin 1
-    assert st.local_parts is not None, "chain must have run driver-local"
-    msgs = [r.message for r in caplog.records if "multisweep" in r.message]
-    assert len(msgs) == 1, msgs
-    assert "local_exec_max_records=0" in msgs[0], msgs
-    # r15 ADVICE: a second sample() with the SAME config must not re-warn
-    # (repeated short calls previously spammed the log one-per-call)
-    caplog.clear()
-    with caplog.at_level(_logging.WARNING, logger="dblink_spark.er.sampler"):
-        st = sample(st, sample_size=1, options=opts)
-    again = [r.message for r in caplog.records if "multisweep" in r.message]
-    assert again == [], again
+    for p in (1, 2):
+        st = init_state(spark, records, cache, SinglePartition(), 1, seed=47)
+        if p > 1:
+            part = KDTreePartitioner(num_levels=1, attribute_ids=[3])
+            part.fit(st.df.filter("NOT is_summary").select("ent_values"))
+            st = assign_partitions(st, part, p)
+        _sampler_mod._MS_IGNORED_WARNED.clear()  # isolate from suite ordering
+        caplog.clear()
+        with caplog.at_level(_logging.WARNING, logger="dblink_spark.er.sampler"):
+            st = sample(st, sample_size=2, options=opts)
+        assert st.iteration == 4, p  # burnin 2 + 2 kept at thin 1
+        assert st.local_parts is not None, f"p={p} chain must run driver-local"
+        msgs = [r.message for r in caplog.records if "multisweep" in r.message]
+        assert len(msgs) == 1, (p, msgs)
+        if p == 1:
+            assert "single-partition" in msgs[0], msgs
+            assert "local_exec_max_records" not in msgs[0], msgs
+        else:
+            assert "local_exec_max_records=0" in msgs[0], msgs
+        # r15 ADVICE: a second sample() with the SAME config must not
+        # re-warn (repeated short calls previously spammed the log
+        # one-per-call)
+        caplog.clear()
+        with caplog.at_level(_logging.WARNING, logger="dblink_spark.er.sampler"):
+            st = sample(st, sample_size=1, options=opts)
+        again = [r.message for r in caplog.records if "multisweep" in r.message]
+        assert again == [], (p, again)

@@ -7,15 +7,15 @@ record dataset takes automatically; forced here by calling ``transition``
 directly), KD-tree 4 partitions, PCG-I, and asserts the chain invariants
 hold and the partitions stay balanced.
 
-Throughput context (local[32], re-measured after the r5 floor work —
-broadcast cache + p-wide iteration shuffle; tools/measure_300k_scaling.py,
-best of two 3-5-iteration runs): ~7.5 / 2.9 / 1.7 / 1.5 s per iteration at
-1 / 2 / 4 / 8 partitions (2.6x / 4.3x / 5.1x vs one partition; single-
-partition timings vary ±15% run-to-run since one 300k-cluster kernel is a
-multi-second single thread). The distributed path beats the driver-local
-sequential kernels from 2 partitions up at this scale. `bench.py`
-(`paper_scale_spark_path`) tracks the 1-vs-4-partition numbers per round
-at 100k, where r5 measured 0.49 -> 1.35 it/s (2.7x).
+Throughput context (local[32], measured after the r5 floor work —
+broadcast cache + p-wide iteration shuffle; best of two 3-5-iteration
+runs): ~7.5 / 2.9 / 1.7 / 1.5 s per iteration at 1 / 2 / 4 / 8 partitions
+(2.6x / 4.3x / 5.1x vs one partition; single-partition timings vary ±15%
+run-to-run since one 300k-cluster kernel is a multi-second single thread).
+The distributed path beats the driver-local sequential kernels from 2
+partitions up at this scale. The 100k-record 1-vs-4-partition readings
+bench.py took through r17 are recorded in the committed ``BENCH_r*.json``
+artifacts (r5 measured 0.49 -> 1.35 it/s, 2.7x).
 
 Record count is tunable via SPARK_GRAFT_PAPER_N for slower machines.
 """

@@ -15,10 +15,10 @@ Thresholds come from a measured full-length run
 (P=0.625 / R=0.984 / F1=0.764 / ARI=0.764) with slack for kernel evolution.
 The chain is fully seeded, so regressions here are real.
 
-Why the precision threshold sits at 0.55 (ADVICE r4 follow-up, measured by
-tools/rl10k_trajectory.py): the per-iteration POINT clustering precision is
-STATIONARY at 0.45-0.47 from iteration 200 all the way to 1000 (R climbs
-0.92 -> 0.99), and the sMPC estimator's precision monotonically IMPROVES
+Why the precision threshold sits at 0.55 (ADVICE r4 follow-up, measured on
+the per-iteration chain of one full-length run): the per-iteration POINT
+clustering precision is STATIONARY at 0.45-0.47 from iteration 200 all
+the way to 1000 (R climbs 0.92 -> 0.99), and the sMPC estimator's precision monotonically IMPROVES
 with more samples (0.588 at cutoff 200 -> 0.622 at 1000). There is no
 late-chain over-merging drift: the earlier short-run P=0.783/R=0.668 was
 the pre-convergence transient, and the recall-heavy stationary posterior is
@@ -78,7 +78,7 @@ def test_no_precision_drift(results):
     """Late-chain point precision must match mid-chain (stationarity): a
     monotone precision decay between iterations 200 and 1000 would mean the
     sampler over-merges as the chain runs — the failure mode ADVICE r4
-    asked to rule out. Measured trajectory (tools/rl10k_trajectory.py):
+    asked to rule out. Measured trajectory (one full-length run):
     point-P 0.453/0.455/0.455/0.460/0.446/0.450/0.462/0.467/0.459 at
     200..1000; sMPC-P strictly rising 0.588 -> 0.622."""
     from pyspark.sql import functions as F

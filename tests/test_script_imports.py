@@ -5,6 +5,12 @@ cannot cost the payload line, which also means a probe importing a removed
 function disappears without an error. The scripts under ``tools/``,
 ``examples/`` and ``erbench/`` are not imported by any test either. This
 parses them and resolves each import against the package.
+
+It also checks that every ``tools/<name>.py`` the documentation, the tests,
+the package and the scripts cite still exists, so a deleted script leaves
+no dangling citation. The history files (``CHANGES.md``, ``ROADMAP.md``,
+``VERDICT.md``, ``ADVICE.md``, ``BENCH_*`` artifacts) record what once
+existed and are not scanned.
 """
 
 from __future__ import annotations
@@ -13,6 +19,7 @@ import ast
 import glob
 import importlib
 import os
+import re
 
 import pytest
 
@@ -25,6 +32,19 @@ SCRIPTS = sorted(
         for p in glob.glob(os.path.join(ROOT, pattern))
     ]
 )
+
+#: files whose ``tools/<name>.py`` citations must resolve
+CITING = sorted(
+    {os.path.join(ROOT, "README.md"), os.path.join(ROOT, "COVERAGE.md")}
+    | set(SCRIPTS)
+    | {
+        p
+        for d in ("docs", "tests", "dblink_spark")
+        for ext in ("py", "md")
+        for p in glob.glob(os.path.join(ROOT, d, "**", f"*.{ext}"), recursive=True)
+    }
+)
+TOOLS_CITATION = re.compile(r"(?<![\w/.-])tools/\w+\.py")
 
 
 def _package_imports(path: str) -> list[tuple[int, str, str | None]]:
@@ -65,3 +85,16 @@ def test_package_imports_resolve(path):
 def test_scripts_are_found():
     names = {os.path.relpath(p, ROOT) for p in SCRIPTS}
     assert {"bench.py", "erbench/run.py", "tools/driver_sim.py"} <= names
+
+
+def test_cited_tools_scripts_exist():
+    dangling = []
+    for path in CITING:
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                dangling += [
+                    f"{os.path.relpath(path, ROOT)}:{lineno}: {cited}"
+                    for cited in TOOLS_CITATION.findall(line)
+                    if not os.path.exists(os.path.join(ROOT, cited))
+                ]
+    assert not dangling, dangling

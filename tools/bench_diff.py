@@ -135,52 +135,8 @@ def diff(old: dict, new: dict, threshold: float) -> list[str]:
             f"{'canary (host load)':<32} {co:>8.3f} {cn:>8.3f} "
             f"{cn / co:>6.2f}x  (ratios near this are drift, not code)"
         )
-    # linkage-QUALITY drift (r9): the rl10k chain is seeded/deterministic,
-    # so under the same methodology marker any delta is a semantic kernel
-    # change; a drop beyond 0.02 absolute gates (improvements never do)
-    if old.get("er_rl10k_quality_chain") == new.get(
-        "er_rl10k_quality_chain"
-    ) and new.get("er_rl10k_quality_chain"):
-        for k in ("er_rl10k_f1", "er_rl10k_ari"):
-            qo, qn = old.get(k), new.get(k)
-            if qo is None or qn is None:
-                continue
-            note = "" if qn >= qo - 1e-9 else "  (quality drop)"
-            print(f"{k:<32} {qo:>8.4f} {qn:>8.4f} {'':>7}{note}")
-            if qn < qo - 0.02:
-                regressions.append(f"{k}: {qo:.4f} -> {qn:.4f} (quality drop)")
-    io, inw = old.get("er_mcmc_iters_per_sec"), new.get("er_mcmc_iters_per_sec")
-    if io and inw:
-        # values are only comparable under the same probe methodology:
-        # window length (r6: 10 -> 200 iters) AND statistic (r7: best-of-2
-        # -> median-of-3; medians sit below bests, ADVICE r7). The stat
-        # marker is explicit from r8 (er_mcmc_probe_stat); for older
-        # payloads it is inferred — er_mcmc_spread shipped together with
-        # median-of-3 in r7, so spread-present <=> median3.
-        def _probe_desc(p: dict) -> tuple:
-            stat = p.get("er_mcmc_probe_stat") or (
-                "median3" if "er_mcmc_spread" in p else "best"
-            )
-            return (p.get("er_mcmc_probe_iters") or 10, stat)
-
-        if _probe_desc(old) != _probe_desc(new):
-            od, nd = _probe_desc(old), _probe_desc(new)
-            print(
-                f"{'er_mcmc_iters_per_sec':<32} {io:>8.3f} {inw:>8.3f} "
-                f"{'n/a':>7} (probe methodology changed: "
-                f"{od[0]}it-{od[1]} -> {nd[0]}it-{nd[1]})"
-            )
-        else:
-            # higher is better for throughput
-            print(f"{'er_mcmc_iters_per_sec':<32} {io:>8.3f} {inw:>8.3f} {inw / io:>6.2f}x")
-            if inw < io / args_threshold_global:
-                regressions.append(
-                    f"er_mcmc_iters_per_sec: {io:.2f} -> {inw:.2f} ({io / inw:.2f}x slower)"
-                )
     return regressions
 
-
-args_threshold_global = 1.5
 
 if __name__ == "__main__":
     ap = argparse.ArgumentParser()
@@ -188,7 +144,6 @@ if __name__ == "__main__":
     ap.add_argument("new")
     ap.add_argument("--threshold", type=float, default=1.5)
     args = ap.parse_args()
-    args_threshold_global = args.threshold
     regs = diff(load_bench(args.old), load_bench(args.new), args.threshold)
     if regs:
         print(f"\n{len(regs)} regression(s) over {args.threshold}x:", file=sys.stderr)
